@@ -295,8 +295,10 @@ def main() -> None:
     # map only ever sees WARM floors — structurally blind to cold-path
     # regressions (e.g. first-compile cost of large constant-folded
     # expression trees). first_rep makes the cold-ish first pass visible
-    # WITHOUT touching the headline methodology: additions-only, the
-    # output tail is unchanged.
+    # WITHOUT touching the headline methodology: it is written to the
+    # sidecar and to the "shuffle" stdout line; the last stdout line (the
+    # headline record) is unchanged. A failed rep 0 records -1.0, as in
+    # ``timings``.
     first_rep: dict[str, float] = {}
     shuffle: dict[str, dict] = {}
     for rep in range(max(1, reps)):
@@ -320,6 +322,8 @@ def main() -> None:
                 # keep an earlier successful minimum if one exists: a flaky
                 # later rep must not evict a valid timing from the total
                 timings.setdefault(name, -1.0)
+                if rep == 0:
+                    first_rep[name] = -1.0
                 continue
             if before is not None:
                 # shuffle/input VOLUME per query (first rep): the scale

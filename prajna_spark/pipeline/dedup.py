@@ -688,6 +688,15 @@ def jaccard_similarity_join(
     prefix already excluded.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b.
+
+    Build-time job and lifetime: the shingle-set frame is materialized
+    by an EAGER ``scoped_local_checkpoint`` while this function runs (one
+    job over ``docs``, before any action on the result). The returned
+    frame reads that checkpoint, whose lineage is truncated and whose
+    blocks are freed when the enclosing ``persist_scope`` exits — so
+    consume the result (collect, write, or checkpoint it) inside the
+    scope that was active when this was called. Outside any scope the
+    blocks live for the session.
     """
     from prajna_spark.operators.zipindex import zip_with_index
 

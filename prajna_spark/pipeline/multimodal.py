@@ -146,12 +146,6 @@ AUDIO_META_SCHEMA = (
 )
 
 
-def audio_n_samples_col() -> F.Column:
-    """The synth's sample-count formula, exposed so SQL oracles can mirror
-    it: 400 + (doc_id * 37) % 1200."""
-    return (F.lit(400) + (F.col("doc_id") * 37) % 1200).cast("long")
-
-
 def synthesize_audio(docs: DataFrame) -> DataFrame:
     """documents -> (doc_id, media_type, payload) where payload is a REAL
     RIFF/WAVE PCM file built with the stdlib ``wave`` module — not a fake
@@ -729,7 +723,16 @@ def dhash_hamming_pairs(
     multi-hash doc are guarded here (``doc_a != doc_b`` on the cross
     expansion) because that guard is a free codegen filter; row-level
     dedup is not (a doc-cardinality shuffle) and stays the caller's
-    job (r10 advisory)."""
+    job (r10 advisory).
+
+    Build-time job and lifetime: ``hashes`` is materialized by an EAGER
+    ``scoped_local_checkpoint`` while this function runs (one job over
+    the whole input pipeline, before any action on the result). The
+    returned frame reads that checkpoint, whose lineage is truncated and
+    whose blocks are freed when the enclosing ``persist_scope`` exits —
+    so consume the result (collect, write, or checkpoint it) inside the
+    scope that was active when this was called. Outside any scope the
+    blocks live for the session."""
     if max_hamming >= n_bands:
         raise ValueError("pigeonhole exactness needs max_hamming < n_bands")
     from prajna_spark.operators.lifecycle import scoped_local_checkpoint

@@ -28,12 +28,16 @@ ranking; argmin ties break on the lowest code id / vec_id.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from prajna_spark.functions.rounding import pround
+from prajna_spark.pipeline.similarity import (
+    first_extremum,
+    json_const,
+    lloyd_means,
+    sqdist,
+)
 
 M_SUB = 8  # subspaces
 K_CODES = 16  # codebook entries per subspace
@@ -85,21 +89,17 @@ def pq_codebook_trained(
     All ``m`` subspaces train JOINTLY — one pass per iteration over the
     exploded (vec, subspace, sub-vector) frame instead of m separate
     k-means runs. Assignment is a MAP-ONLY column expression: the whole
-    codebook rides in as one ``from_json`` constant indexed by subspace,
-    and ``array_position(dists, array_min(dists))`` realizes the former
-    min_by (d2, cid) tie-break exactly (entries ascend by code id). The
-    broadcast-join spelling it replaces expanded every sub-vector row
-    k-fold and shuffled the whole exploded corpus — WITH sub-vector
-    payloads — through its argmin aggregate each iteration (r11, guide
-    §2.4); now the only shuffle per iteration carries partial-aggregated
-    mean cells. Driver state is the m*k*sub_dim codebook floats — at
-    100 TB the corpus never leaves the executors and per-iteration cost
-    is one scan + one narrow shuffle.
+    codebook rides in as one :func:`json_const` indexed by subspace, and
+    the first minimum (:func:`first_extremum`) breaks ties to the lowest
+    code id; the only shuffle per iteration carries the partial-aggregated
+    mean cells of :func:`lloyd_means`. Driver state is the m*k*sub_dim
+    codebook floats — at 100 TB the corpus never leaves the executors and
+    per-iteration cost is one scan + one narrow shuffle.
     """
     sub = dim // m
     # a caller that already computed the deterministic seed (e.g. to use
     # the same vectors as coarse-quantizer cells) passes it in instead
-    # of this function re-running the identical k-row collect job (r12)
+    # of this function re-running the identical k-row collect job
     if seed is None:
         seed = pq_codebook(emb, id_col, vec_col, dim, m, k)
     # tiny corpora (< k vectors) seed fewer entries; train what exists —
@@ -135,96 +135,24 @@ def pq_codebook_trained(
     with persist_scope():
         sv = scoped_persist(sv)  # n_iter scans of the exploded frame
         for _ in range(n_iter):
-            # map-only argmin: book[s] rides in as element_at of ONE
-            # from_json constant; first minimum == min_by (d2, cid).
-            # Single-traversal fold (r12): the array_position(array_min)
-            # spelling referenced the distance array twice — no CSE for
-            # CodegenFallback higher-order functions, so each exploded
-            # row paid the k x sub_dim fold twice (see pq_enc_struct).
-            cb = F.from_json(
-                F.lit(json.dumps(book, allow_nan=False)),
-                "array<array<array<double>>>",
-            )
+            cb = json_const(book, "array<array<array<double>>>")
             scored = F.transform(
                 F.element_at(cb, F.col("s") + 1),
                 lambda e, i: F.struct(
-                    _sqdist_fold(F.col("sv"), e).alias("d"), i.alias("i")
+                    sqdist(F.col("sv"), e).alias("d"), i.alias("i")
                 ),
             )
-            best = F.aggregate(
-                scored,
-                F.lit(None).cast("struct<d:double,i:int>"),
-                lambda acc, x: F.when(
-                    (acc["i"].isNull() & x["d"].isNotNull())
-                    | (x["d"] < acc["d"]),
-                    x,
-                ).otherwise(acc),
+            best = first_extremum(
+                scored, "struct<d:double,i:int>", "d", "i", minimize=True
             )
             assigned = sv.select("s", best["i"].alias("cid"), "sv")
-            # posexplode + two-level aggregate, deliberately: the
-            # dim-fold explosion is MAP-SIDE and partial-aggregated
-            # before the exchange (the shuffle carries m*k*sub_dim mean
-            # cells). A "one aggregation" spelling with sub_dim parallel
-            # avg(element_at) aggregates was tried in r12 and measured
-            # WORSE at sf0.1 (1.4x on ivf_pq; 5x on the 64-dim kmeans
-            # variant of the same rewrite — aggregate-buffer fields past
-            # codegen's limit drop the stage to interpreted mode).
-            means = (
-                assigned.select("s", "cid", F.posexplode("sv").alias("dim", "x"))
-                .groupBy("s", "cid", "dim")
-                .agg(pround(F.avg("x"), round_decimals).alias("mval"))
-                .groupBy("s", "cid")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("dim", "mval"))),
-                        lambda st: st["mval"],
-                    ).alias("c")
-                )
-            )
-            new = {(r.s, r.cid): list(r.c) for r in means.collect()}
+            means = lloyd_means(assigned, ["s", "cid"], round_decimals)
+            new = {(r.s, r.cid): list(r.centroid) for r in means.collect()}
             for s in range(m):
                 for c in range(k):
                     book[s][c] = new.get((s, c), book[s][c])
 
     return book
-
-
-def _lit_vecs(entries: list[list[float]]) -> Column:
-    """Literal array-of-arrays column for a small codebook/centroid set.
-
-    Spelled ``from_json`` over ONE string literal, not nested
-    ``F.array(F.lit(...))``: the CreateArray spelling puts m*k*sub_dim
-    literal NODES into the expression tree, and every codebook consumer
-    paid seconds of driver-side analysis/codegen per query (measured:
-    the encode projection alone 3.96 s cold / 0.70 s warm vs 0.54/0.47
-    with this spelling — guide §7.3 "planning time itself can become the
-    bottleneck"). The optimizer constant-folds the parse into a single
-    array literal, so executors see the identical value: Python ``repr``
-    emits shortest-round-trip decimals and JVM ``parseDouble`` is
-    correctly rounded, hence bit-exact doubles (verified: 0 mismatched
-    rows against the CreateArray spelling). allow_nan=False: a non-finite
-    codebook value would emit a NaN/Infinity token that PERMISSIVE
-    from_json nulls out silently (whole constant -> null) — fail fast at
-    expression-build time instead (ADVICE r11)."""
-    return F.from_json(
-        F.lit(json.dumps(entries, allow_nan=False)), "array<array<double>>"
-    )
-
-
-def _sqdist_fold(a: Column, b: Column) -> Column:
-    """Left-folded squared-L2 between two array<double> columns — the
-    same sequential association as an unrolled (a0-b0)^2 + ... chain,
-    so results are bit-identical to the oracle's explicit term sums.
-    Expressed as zip_with+aggregate instead of unrolled terms: the
-    unrolled spelling at m*k codebook fan-out built expression trees
-    past janino's 64KB method limit, knocking the WHOLE stage out of
-    codegen into interpreted eval and costing ~30s of driver-side plan
-    construction besides (measured; data-size independent)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def pq_enc_struct(
@@ -237,19 +165,15 @@ def pq_enc_struct(
     need codes NEXT TO other per-vector columns project them in place
     instead of joining :func:`pq_encode`'s output back against the
     corpus (that join was a full corpus self-shuffle for what is a
-    per-row expression — r11, guide §2.4).
+    per-row expression).
 
-    r12 single-traversal shape: the whole codebook rides in as ONE
-    ``from_json`` constant and is referenced ONCE. The per-subspace
-    loop it replaces referenced each subspace's distance array 3x
-    (array_position + array_min + the err chain) — higher-order
-    functions are CodegenFallback, no common-subexpression elimination,
-    so every row paid the m x k x sub_dim distance folds THREE times
-    and the tree carried three copies of the codebook (the r11-measured
-    cold-compile cost). Tie-break unchanged: the strictly-less fold
-    keeps the FIRST minimum == lowest-code; err accumulates in the same
-    left-to-right subspace order ((0.0 + d0) + d1 ... with d >= 0, and
-    +0.0 + x == x bit-exactly).
+    The whole codebook rides in as ONE :func:`json_const` referenced
+    once, and each subspace's distance array is traversed once by
+    :func:`first_extremum` (higher-order functions are CodegenFallback:
+    no common-subexpression elimination, so every extra reference would
+    re-run the m x k x sub_dim distance folds per row). Ties go to the
+    lowest code; err accumulates in left-to-right subspace order
+    ((0.0 + d0) + d1 ... with d >= 0, and +0.0 + x == x bit-exactly).
 
     Consumers needing BOTH fields must alias the struct in one
     projection and extract fields in a SECOND (see pq_encode):
@@ -259,28 +183,21 @@ def pq_enc_struct(
     m = len(codebook)
     sub_dim = len(codebook[0][0])
     v = F.col(vec_col).cast("array<double>")
-    cb3 = F.from_json(
-        F.lit(json.dumps(codebook, allow_nan=False)),
-        "array<array<array<double>>>",
-    )
+    cb3 = json_const(codebook, "array<array<array<double>>>")
     bests = F.transform(
         cb3,
-        lambda book_s, s: F.aggregate(
+        lambda book_s, s: first_extremum(
             F.transform(
                 book_s,
                 lambda e, i: F.struct(
-                    _sqdist_fold(
-                        F.slice(v, s * sub_dim + 1, sub_dim), e
-                    ).alias("d"),
+                    sqdist(F.slice(v, s * sub_dim + 1, sub_dim), e).alias("d"),
                     i.alias("i"),
                 ),
             ),
-            F.lit(None).cast("struct<d:double,i:int>"),
-            lambda acc, x: F.when(
-                (acc["i"].isNull() & x["d"].isNotNull())
-                | (x["d"] < acc["d"]),
-                x,
-            ).otherwise(acc),
+            "struct<d:double,i:int>",
+            "d",
+            "i",
+            minimize=True,
         ),
     )
     return F.aggregate(
@@ -326,17 +243,13 @@ def adc_distance(
     per subspace the codebook entry codes[s] selects and the squared-L2
     to the query's exact sub-vector (the lookup-table walk); terms sum
     left-associated in subspace order ((0.0 + d0) + d1 ..., bit-equal to
-    the former d0 + d1 ... chain since d >= 0). r12: the codebook rides
-    in as ONE from_json constant referenced once (was m separate
-    literals)."""
+    the former d0 + d1 ... chain since d >= 0). The codebook rides in as
+    ONE :func:`json_const` referenced once."""
     sub_dim = len(codebook[0][0])
-    cb3 = F.from_json(
-        F.lit(json.dumps(codebook, allow_nan=False)),
-        "array<array<array<double>>>",
-    )
+    cb3 = json_const(codebook, "array<array<array<double>>>")
     terms = F.transform(
         cb3,
-        lambda book_s, s: _sqdist_fold(
+        lambda book_s, s: sqdist(
             F.slice(q_vec, s * sub_dim + 1, sub_dim),
             F.element_at(book_s, F.element_at(codes, s + 1).cast("int") + 1),
         ),
@@ -380,7 +293,7 @@ def pq_adc_recall(
         F.col("cand_id") != F.col("query_id")
     )
 
-    exact = _sqdist_fold(F.col("q_vec"), F.col("c_vec"))
+    exact = sqdist(F.col("q_vec"), F.col("c_vec"))
 
     adc = adc_distance(codebook, F.col("q_vec"), F.col("codes"))
 
@@ -446,26 +359,18 @@ def ivf_pq_search(
     from pyspark.sql import Window
 
     v = F.col(vec_col).cast("array<double>")
-    # per-query probe-ranking AND cell-assignment share this cid lookup
     cid_arr = F.array(*[F.lit(int(cid)).cast("long") for cid, _ in centroids])
-    # coarse cell assignment: first minimum of the per-centroid squared-
-    # L2, in centroid-list order — one traversal, constant referenced
-    # once (the array_position(array_min) spelling evaluated the
-    # distance transform twice per row; see pq_enc_struct)
+    # (squared L2, cid) per centroid in centroid-list order: its first
+    # minimum is a row's cell, and its nprobe smallest are a query's probes
     cents_scored = F.transform(
-        _lit_vecs([ce for _, ce in centroids]),
+        json_const([ce for _, ce in centroids], "array<array<double>>"),
         lambda ce, i: F.struct(
-            _sqdist_fold(v, ce).alias("d"),
+            sqdist(v, ce).alias("d"),
             F.element_at(cid_arr, i + 1).alias("cid"),
         ),
     )
-    cell = F.aggregate(
-        cents_scored,
-        F.lit(None).cast("struct<d:double,cid:bigint>"),
-        lambda acc, x: F.when(
-            (acc["cid"].isNull() & x["d"].isNotNull()) | (x["d"] < acc["d"]),
-            x,
-        ).otherwise(acc),
+    cell = first_extremum(
+        cents_scored, "struct<d:double,cid:bigint>", "d", "cid", minimize=True
     )["cid"]
 
     # cell id and codes are both per-row expressions — one projection,
@@ -476,17 +381,10 @@ def ivf_pq_search(
         cell.alias("cell"),
         pq_enc_struct(codebook, vec_col)["codes"].alias("codes"),
     )
-    probe_structs = F.transform(
-        _lit_vecs([ce for _, ce in centroids]),
-        lambda ce, i: F.struct(
-            _sqdist_fold(v, ce).alias("d"),
-            F.element_at(cid_arr, i + 1).alias("cid"),
-        ),
-    )
     q = emb.where(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("query_id"),
         v.alias("q_vec"),
-        F.slice(F.array_sort(probe_structs), 1, nprobe).alias("probed"),
+        F.slice(F.array_sort(cents_scored), 1, nprobe).alias("probed"),
     )
     probes = q.select(
         "query_id", "q_vec", F.explode("probed").alias("p")

@@ -1,17 +1,20 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers, per the north star:
+Tiers, per the north star:
 - brute-force cosine top-k — exact baseline; query side broadcast, window
   top-k per query. Cost O(|Q| * n); right answer for small query sets.
-- signed-random-projection (SRP) LSH bucketing — the scale path: each
-  vector hashes to a small integer bucket from the signs of dot products
-  with fixed pseudo-random hyperplanes; ANN search probes only matching
-  buckets (an equi-join on bucket id instead of a cross join).
+- IVF (inverted-file) top-k over k-means or seed centroids — the scale
+  path: each vector's cell is a map-only expression, and a query scores
+  only the vectors in its ``nprobe`` nearest cells.
+- signed-random-projection (SRP) LSH bucketing: each vector hashes to a
+  small integer bucket from the signs of dot products with fixed
+  pseudo-random hyperplanes — a shuffle key for candidate generation.
 
 All math in double-precision column expressions (F.aggregate/F.zip_with —
 sequential fold, bit-compatible with the DuckDB oracle's list arithmetic).
 Hyperplanes are deterministic (md5-seeded, no RNG) so plans and oracles
-reproduce across engines and rounds.
+reproduce across engines and rounds. The vector kernels shared with
+``pq`` (json_const, sqdist, first_extremum, lloyd_means) live here.
 """
 
 from __future__ import annotations
@@ -43,6 +46,104 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
+def sqdist(a: Column, b: Column) -> Column:
+    """Left-folded squared-L2 between two array<double> columns — the
+    same sequential association as an unrolled (a0-b0)^2 + ... chain, so
+    results are bit-identical to the oracle's explicit term sums. An
+    unrolled spelling at PQ's m*k codebook fan-out built expression trees
+    past janino's 64KB method limit, knocking the whole stage out of
+    codegen and costing ~30 s of driver-side plan construction
+    (measured; data-size independent)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def json_const(value, ddl: str) -> Column:
+    """A constant column of type ``ddl``, spelled ``from_json`` over ONE
+    string literal. Nested ``F.array(F.lit(...))`` puts every element
+    into the expression tree as a literal node, and driver-side analysis
+    and codegen grow with that count (measured on the PQ encode
+    projection: 3.96 s cold / 0.70 s warm, against 0.54 / 0.47 s with
+    this spelling). The optimizer constant-folds the parse into a single
+    literal, and the doubles are bit-exact: Python's ``repr`` emits
+    shortest round-trip decimals and the JVM's ``parseDouble`` is
+    correctly rounded.
+
+    ``allow_nan=False``: a non-finite value would serialize as a NaN or
+    Infinity token, which PERMISSIVE ``from_json`` turns into a null for
+    the WHOLE constant without an error — so fail at build time
+    instead."""
+    return F.from_json(F.lit(json.dumps(value, allow_nan=False)), ddl)
+
+
+def first_extremum(
+    scored: Column, acc_type: str, key: str, tag: str, minimize: bool
+) -> Column:
+    """The struct of the array ``scored`` with the smallest
+    (``minimize``) or largest ``key``, found in ONE left fold.
+
+    Callers build ``scored`` with ``F.transform`` over a
+    :func:`json_const` table, so the per-element score fold and the
+    constant are each referenced once: higher-order functions are
+    CodegenFallback and get no common-subexpression elimination, so an
+    ``array_position(arr, array_min(arr))`` spelling would evaluate
+    ``arr`` twice per row. ``acc_type`` is the struct's DDL; ``tag`` is a
+    field never null in a scored element, used to mark the accumulator
+    as still empty.
+
+    Same answer as ``array_min``/``array_max`` then ``array_position``:
+    ties keep the FIRST element (strict comparison), so entries listed in
+    ascending id order break ties to the lowest id; null keys are
+    skipped, and an all-null or empty array gives null; NaN ranks above
+    every number (Spark's NaN-safe ordering), so a maximum keeps the
+    first NaN and a minimum is NaN only when every key is."""
+
+    def step(acc: Column, x: Column) -> Column:
+        better = x[key] < acc[key] if minimize else x[key] > acc[key]
+        return F.when(
+            (acc[tag].isNull() & x[key].isNotNull()) | better, x
+        ).otherwise(acc)
+
+    return F.aggregate(scored, F.lit(None).cast(acc_type), step)
+
+
+def lloyd_means(
+    assigned: DataFrame, group_cols: list[str], round_decimals: int | None
+) -> DataFrame:
+    """One Lloyd update: the element-wise mean vector of each
+    ``group_cols`` group, as ``group_cols`` + ``centroid`` (array<double>
+    in dimension order). ``assigned`` holds ``group_cols`` and exactly one
+    array<double> column. With ``round_decimals`` set, each mean is
+    rounded with the engine-portable ``pround``.
+
+    posexplode, avg per (group, dim), then a sorted collect_list: the
+    explosion is map-side and partial-aggregated before the exchange, so
+    the shuffle carries one row per (group, dim) cell, never vectors. A
+    one-aggregation spelling with dim parallel ``avg(element_at(v, i))``
+    aggregates measured 5x slower at sf0.1: 64 avg aggregates mean 128
+    aggregate-buffer fields, past codegen's field limit, so the whole
+    stage, per-row argmin fold included, drops to interpreted mode."""
+    (vec,) = [c for c in assigned.columns if c not in group_cols]
+    mean = F.avg("x")
+    if round_decimals is not None:
+        mean = pround(mean, round_decimals)
+    return (
+        assigned.select(*group_cols, F.posexplode(vec).alias("dim", "x"))
+        .groupBy(*group_cols, "dim")
+        .agg(mean.alias("m"))
+        .groupBy(*group_cols)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "m"))),
+                lambda s: s["m"],
+            ).alias("centroid")
+        )
+    )
+
+
 def cosine(a: Column, b: Column) -> Column:
     a, b = _as_double(a), _as_double(b)
     return dot(a, b) / (norm(a) * norm(b))
@@ -63,25 +164,12 @@ def srp_hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
 
 def srp_bucket(vec: Column, dim: int, n_planes: int = 8) -> Column:
     """SRP-LSH bucket id in [0, 2^n_planes): bit j set iff dot(v, h_j) > 0.
-
-    Each hyperplane rides in as ``from_json`` over one string literal
-    rather than a dim-wide CreateArray of literal nodes — the optimizer
-    constant-folds it to the identical array literal (±1.0 round-trips
-    JSON exactly) and the analyzed tree drops from n_planes*dim literal
-    nodes to n_planes, cutting per-run driver planning cost (same
-    rewrite as pq._lit_vecs; guide §7.3)."""
-    import json as _json
-
+    Each hyperplane is one :func:`json_const`, so the analyzed tree holds
+    n_planes constants, not n_planes*dim literal nodes."""
     v = _as_double(vec)
     bucket = F.lit(0)
     for j, plane in enumerate(srp_hyperplanes(dim, n_planes)):
-        # allow_nan=False: non-finite floats would serialize as the
-        # non-standard NaN/Infinity tokens, which Spark's PERMISSIVE
-        # from_json nulls out SILENTLY (whole constant -> null) — fail
-        # fast at build time instead (ADVICE r11)
-        h = F.from_json(
-            F.lit(_json.dumps(plane, allow_nan=False)), "array<double>"
-        )
+        h = json_const(plane, "array<double>")
         bucket = bucket + F.when(dot(v, h) > 0, F.lit(2**j)).otherwise(F.lit(0))
     return bucket.cast("long")
 
@@ -136,19 +224,22 @@ def knn_bruteforce(
         "c_vec",
         "c_norm",
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            pround(
-                paired_cosine(
-                    F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-                ),
-                sim_decimals,
-            ).alias("sim"),
-        )
+    return _cosine_topk(c.crossJoin(F.broadcast(q)), k, sim_decimals)
+
+
+def _cosine_topk(pairs: DataFrame, k: int, sim_decimals: int) -> DataFrame:
+    """Per-query top-k of candidate ``pairs`` (query_id, q_vec, q_norm,
+    neighbor_id, c_vec, c_norm) by rounded cosine, ties to the lowest
+    neighbor id; a vector is never its own neighbour."""
+    scored = pairs.where(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id",
+        "neighbor_id",
+        pround(
+            paired_cosine(
+                F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
+            ),
+            sim_decimals,
+        ).alias("sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id")
@@ -188,35 +279,19 @@ def _centroid_entries(
 
 
 def _cell_expr(
-    entries: list[dict], vec: Column, vn: Column, sim_decimals: int
+    centroids: DataFrame, id_col: str, vec_col: str, sim_decimals: int
 ) -> Column:
-    """Nearest-centroid id for ONE row as a pure expression: rounded
-    cosine against each entry (ascending cid), first maximum — exactly
-    the former (sim desc, centroid_id asc) tie-break. The centroid
-    table rides in as ``from_json`` over one string literal
-    (constant-folded; see pq._lit_vecs), so the assignment is MAP-ONLY:
-    the previous max_by spelling still shuffled corpus-cardinality
-    partial rows WITH vector payloads through its aggregate exchange
-    (r11, guide §2.4).
-
-    r12: ONE traversal. The former ``array_position(sims,
-    array_max(sims))`` spelling referenced ``sims`` twice and the
-    constant three times — higher-order functions are CodegenFallback
-    (no common-subexpression elimination), so every row paid the K x
-    dim cosine fold TWICE, and the analyzed tree carried three copies
-    of the constant (the r11-measured cold-compile cost). The
-    strictly-greater left fold below keeps the FIRST maximum —
-    identical tie-break — and Spark's NaN-safe comparison (NaN greater
-    than everything, first NaN kept) matches array_max's ordering; the
-    null-entry guard reproduces array_max's null-skipping (an all-null
-    sims column yields a null cid either way)."""
-    # allow_nan=False: a non-finite centroid value would otherwise emit
-    # a NaN/Infinity token that PERMISSIVE from_json nulls out silently
-    # (every row would get a null centroid_id) — fail fast (ADVICE r11)
-    cb = F.from_json(
-        F.lit(json.dumps(entries, allow_nan=False)),
+    """Nearest-centroid id of a row carrying ``vec_col`` and its norm
+    ``__vn`` (see with_norm), as a pure expression: the first maximum of
+    the rounded cosine against each centroid, in ascending centroid id,
+    i.e. ties to the lowest id. The K centroids are collected once and
+    ride in as one :func:`json_const`, so the assignment is map-only: no
+    broadcast build, join, aggregate or exchange at any corpus size."""
+    cb = json_const(
+        _centroid_entries(centroids, id_col, vec_col),
         "array<struct<cid:bigint,cn:double,cv:array<double>>>",
     )
+    vec, vn = _as_double(F.col(vec_col)), F.col("__vn")
     scored = F.transform(
         cb,
         lambda e: F.struct(
@@ -226,16 +301,9 @@ def _cell_expr(
             e["cid"].alias("cid"),
         ),
     )
-    best = F.aggregate(
-        scored,
-        F.lit(None).cast("struct<s:double,cid:bigint>"),
-        lambda acc, x: F.when(
-            (acc["cid"].isNull() & x["s"].isNotNull())
-            | (x["s"] > acc["s"]),
-            x,
-        ).otherwise(acc),
-    )
-    return best["cid"]
+    return first_extremum(
+        scored, "struct<s:double,cid:bigint>", "s", "cid", minimize=False
+    )["cid"]
 
 
 def ivf_assign(
@@ -247,38 +315,12 @@ def ivf_assign(
 ) -> DataFrame:
     """Coarse quantization: assign every vector to its nearest centroid
     (max rounded cosine, ties to lowest centroid id) -> (id, centroid_id).
-
-    MAP-ONLY: the K centroids are collected once (bounded driver read)
-    and folded into a constant struct array; the per-row argmax is a
-    column expression — no broadcast build, no join, no aggregate, no
-    exchange at any corpus size. This builds the IVF inverted lists; at
+    Map-only (see _cell_expr). This builds the IVF inverted lists; at
     100 TB you would persist the assignment partitioned BY centroid_id
     so probes touch only matching files."""
-    entries = _centroid_entries(centroids, id_col, vec_col)
     v = with_norm(vectors.select(id_col, vec_col), vec_col, "__vn")
-    cell = _cell_expr(
-        entries, _as_double(F.col(vec_col)), F.col("__vn"), sim_decimals
-    )
+    cell = _cell_expr(centroids, id_col, vec_col, sim_decimals)
     return v.select(id_col, cell.alias("centroid_id"))
-
-
-def _ivf_assign_carry(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sim_decimals: int = 6,
-) -> DataFrame:
-    """:func:`ivf_assign` that also keeps the vector and its norm on the
-    row — with the map-only expression form this is a plain projection
-    (no aggregate to carry anything through), so knn_ivf's inverted
-    lists come straight off the scan."""
-    entries = _centroid_entries(centroids, id_col, vec_col)
-    v = with_norm(vectors.select(id_col, vec_col), vec_col, "__vn")
-    cell = _cell_expr(
-        entries, _as_double(F.col(vec_col)), F.col("__vn"), sim_decimals
-    )
-    return v.select(id_col, cell.alias("centroid_id"), vec_col, "__vn")
 
 
 def ivf_assign_with_vectors(
@@ -289,49 +331,24 @@ def ivf_assign_with_vectors(
     sim_decimals: int = 6,
 ) -> DataFrame:
     """All of ``vectors``' columns plus ``centroid_id`` — the index-build
-    projection. Replaces the former ``vectors ⋈ ivf_assign(...)`` on
-    ``id_col``: that was a corpus self-join to re-attach rows the
-    assignment had just scanned (r11, guide §2.4)."""
-    entries = _centroid_entries(centroids, id_col, vec_col)
+    projection, with no self-join to re-attach the rows the assignment
+    scanned."""
     w = with_norm(vectors, vec_col, "__vn")
-    cell = _cell_expr(
-        entries, _as_double(F.col(vec_col)), F.col("__vn"), sim_decimals
-    )
+    cell = _cell_expr(centroids, id_col, vec_col, sim_decimals)
     return w.select(*vectors.columns, cell.alias("centroid_id"))
 
 
-def knn_ivf(
-    vectors: DataFrame,
+def _ivf_probes(
     queries: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    nprobe: int = 4,
-    sim_decimals: int = 6,
+    id_col: str,
+    vec_col: str,
+    nprobe: int,
+    sim_decimals: int,
 ) -> DataFrame:
-    """IVF ANN top-k: exact search restricted to the ``nprobe`` cells whose
-    centroids are nearest each query.
-
-    Plan shape at scale: centroids broadcast twice (assignment + probe
-    ranking, both tiny); the only data-sized shuffle is the equi-join of
-    the inverted lists with the (query x probed-cell) pairs on
-    centroid_id. Recall/cost dials: more centroids -> smaller cells;
-    higher nprobe -> higher recall. Centroid selection here is
-    deterministic seed-vectors; production swaps in k-means centers
-    without touching the query plan."""
-    # the assignment argmax CARRIES each vector + norm through the
-    # aggregate, so the inverted lists need no corpus self-join to
-    # re-attach them (r11; was vectors ⋈ assign on id)
-    inv = _ivf_assign_carry(
-        vectors, centroids, id_col, vec_col, sim_decimals
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col("__vn").alias("c_norm"),
-        "centroid_id",
-    )
-
+    """(query_id, q_vec, q_norm, centroid_id) for each query's ``nprobe``
+    nearest centroids by rounded cosine, ties to the lowest centroid id.
+    Both sides are tiny; the centroids are broadcast."""
     q = with_norm(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
         "q_vec",
@@ -347,7 +364,7 @@ def knn_ivf(
     w_probe = Window.partitionBy("query_id").orderBy(
         F.col("__csim").desc(), F.col("centroid_id")
     )
-    probes = (
+    return (
         q.crossJoin(F.broadcast(c))
         .withColumn(
             "__csim",
@@ -363,82 +380,37 @@ def knn_ivf(
         .select("query_id", "q_vec", "q_norm", "centroid_id")
     )
 
-    scored = (
-        inv.join(F.broadcast(probes), "centroid_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            pround(
-                paired_cosine(
-                    F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-                ),
-                sim_decimals,
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
 
-
-def knn_lsh(
+def knn_ivf(
     vectors: DataFrame,
     queries: DataFrame,
-    dim: int,
+    centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    n_planes: int = 8,
+    nprobe: int = 4,
+    sim_decimals: int = 6,
 ) -> DataFrame:
-    """ANN top-k: equi-join on SRP bucket, then exact cosine within bucket.
+    """IVF ANN top-k: exact search restricted to the ``nprobe`` cells whose
+    centroids are nearest each query.
 
-    The scale path — candidate generation is a shuffle on the bucket id
-    (2^n_planes distinct keys; raise n_planes to shrink buckets as n
-    grows), never a cross join.
-    """
-    vb = with_norm(
-        vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            srp_bucket(F.col(vec_col), dim, n_planes).alias("bucket"),
-        ),
-        "c_vec",
-        "c_norm",
+    Plan shape at scale: the cell assignment is map-only and carries
+    each vector and its norm, so the inverted lists come straight off the
+    scan; the probe list (query x nprobe cells) is broadcast into the
+    equi-join with them on centroid_id. Recall/cost dials: more centroids
+    -> smaller cells; higher nprobe -> higher recall. Centroid selection
+    here is deterministic seed-vectors; production swaps in k-means
+    centers without touching the query plan."""
+    v = with_norm(vectors.select(id_col, vec_col), vec_col, "__vn")
+    inv = v.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("c_vec"),
+        F.col("__vn").alias("c_norm"),
+        _cell_expr(centroids, id_col, vec_col, sim_decimals).alias("centroid_id"),
     )
-    qb = with_norm(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            srp_bucket(F.col(vec_col), dim, n_planes).alias("bucket"),
-        ),
-        "q_vec",
-        "q_norm",
-    )
-    scored = (
-        vb.join(F.broadcast(qb), "bucket")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            pround(
-                paired_cosine(
-                    F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-                ),
-                6,
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
+    probes = _ivf_probes(queries, centroids, id_col, vec_col, nprobe, sim_decimals)
+    return _cosine_topk(
+        inv.join(F.broadcast(probes), "centroid_id"), k, sim_decimals
     )
 
 
@@ -465,8 +437,6 @@ def build_ivf_index(
     streaming maintainer (streaming.ann_stream) can overwrite exactly its
     own micro-batch's leaves on replay — idempotent at-least-once appends
     — while centroid_id stays the top-level directory DPP prunes on."""
-    # one map-only projection — the former vectors ⋈ ivf_assign corpus
-    # self-join re-attached rows the assignment had just scanned (r11)
     (
         ivf_assign_with_vectors(vectors, centroids, id_col, vec_col)
         .withColumn("ingest_batch", F.lit(-1))
@@ -490,40 +460,10 @@ def search_ivf_index(
     """ANN top-k over a :func:`build_ivf_index` layout. The probe set
     (query x nprobe nearest centroids) is broadcast; joining it to the
     partitioned index on centroid_id lets Spark prune index partitions at
-    runtime (DPP) — I/O scales with nprobe, not index size. Scoring and
-    the per-query top-k window are identical to ``knn_ivf``, so results
-    match the in-memory operator exactly."""
-    c = with_norm(
-        centroids.select(
-            F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("centroid_vec")
-        ),
-        "centroid_vec",
-        "__cn",
-    )
-    q = with_norm(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
-        "q_vec",
-        "q_norm",
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("__csim").desc(), F.col("centroid_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(c))
-        .withColumn(
-            "__csim",
-            pround(
-                paired_cosine(
-                    F.col("q_vec"), F.col("centroid_vec"), F.col("q_norm"), F.col("__cn")
-                ),
-                sim_decimals,
-            ),
-        )
-        .withColumn("__rn", F.row_number().over(w_probe))
-        .where(F.col("__rn") <= nprobe)
-        .select("query_id", "q_vec", "q_norm", "centroid_id")
-    )
-
+    runtime (DPP) — I/O scales with nprobe, not index size. Probe ranking,
+    scoring and the per-query top-k are ``knn_ivf``'s, so results match
+    the in-memory operator exactly."""
+    probes = _ivf_probes(queries, centroids, id_col, vec_col, nprobe, sim_decimals)
     inv = with_norm(
         spark.read.parquet(path).select(
             "centroid_id",
@@ -533,25 +473,8 @@ def search_ivf_index(
         "c_vec",
         "c_norm",
     )
-    scored = (
-        inv.join(F.broadcast(probes), "centroid_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            pround(
-                paired_cosine(
-                    F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
-                ),
-                sim_decimals,
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rk")
+    return _cosine_topk(
+        inv.join(F.broadcast(probes), "centroid_id"), k, sim_decimals
     )
 
 
@@ -570,9 +493,9 @@ def kmeans_centroids(
     the k centroids into a constant expression (tiny, k x dim doubles on
     the driver — the only driver-side state), assign every vector to its
     nearest centroid by squared L2 (a map-only column expression — no
-    broadcast build, no join, no exchange; r11), recompute means via
-    posexplode -> groupBy (centroid, dim) -> partial-aggregated avg.
-    Per-iteration shuffle carries k*dim aggregate rows, never vectors.
+    broadcast build, no join, no exchange), recompute means with
+    :func:`lloyd_means`. Per-iteration shuffle carries k*dim aggregate
+    rows, never vectors.
 
     With ``round_decimals`` set, every centroid mean is rounded with the
     engine-portable ``pround`` after each iteration. That makes the whole
@@ -592,14 +515,8 @@ def kmeans_centroids(
     cents = _kmeans_lloyd(v, k, n_iter, round_decimals)
     spark = vectors.sparkSession
     cent_df = spark.createDataFrame(cents, "centroid_id int, centroid array<double>")
-    # final assignment counts: same map-only argmin expression as the
-    # training rounds (no crossJoin, no corpus-payload exchange — r11)
     final_assign = (
-        v.select(
-            _argmin_cid_expr(
-                F.col("__v"), [vec for _, vec in cents]
-            ).alias("centroid_id")
-        )
+        v.select(_argmin_cid_expr(F.col("__v"), cents).alias("centroid_id"))
         .groupBy("centroid_id")
         .agg(F.count(F.lit(1)).alias("n_assigned"))
     )
@@ -610,44 +527,19 @@ def kmeans_centroids(
     )
 
 
-def _argmin_cid_expr(vec: Column, entries: list[list[float]]) -> Column:
-    """0-based index of the nearest entry by left-folded squared-L2 —
-    first minimum realizes the former min_by-(d2, centroid_id)
-    tie-break exactly (entries are in ascending centroid-id order ==
-    array order). The entry table is a ``from_json`` constant, so the
-    argmin is a map-only expression: the crossJoin+min_by spelling it
-    replaces shuffled one corpus-cardinality row WITH the vector
-    payload per iteration (r11).
-
-    r12: ONE traversal via a strictly-less left fold (see _cell_expr —
-    the array_position(array_min) spelling evaluated the K x dim
-    distance fold twice per row and put two copies of the constant in
-    the tree). First minimum kept on ties; d2 is a finite sum of
-    squares, and the null guard matches array_min's null-skipping."""
-    # allow_nan=False: see _cell_expr — silent nulling beats no error
-    cb = F.from_json(
-        F.lit(json.dumps(entries, allow_nan=False)), "array<array<double>>"
-    )
+def _argmin_cid_expr(
+    vec: Column, cents: list[tuple[int, list[float]]]
+) -> Column:
+    """0-based index of the nearest of ``cents`` (in ascending centroid
+    id) by squared L2, as a map-only expression over one
+    :func:`json_const` table; ties go to the lowest id."""
+    cb = json_const([c for _, c in cents], "array<array<double>>")
     scored = F.transform(
-        cb,
-        lambda c, i: F.struct(
-            F.aggregate(
-                F.zip_with(vec, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d"),
-            i.alias("i"),
-        ),
+        cb, lambda c, i: F.struct(sqdist(vec, c).alias("d"), i.alias("i"))
     )
-    best = F.aggregate(
-        scored,
-        F.lit(None).cast("struct<d:double,i:int>"),
-        lambda acc, x: F.when(
-            (acc["i"].isNull() & x["d"].isNotNull()) | (x["d"] < acc["d"]),
-            x,
-        ).otherwise(acc),
-    )
-    return best["i"]
+    return first_extremum(
+        scored, "struct<d:double,i:int>", "d", "i", minimize=True
+    )["i"]
 
 
 def _kmeans_lloyd(
@@ -667,41 +559,11 @@ def _kmeans_lloyd(
     ]
     if not cents:
         return cents  # empty corpus: nothing to train
-    # NOTE (r12, measured-rejection): a "one aggregation" spelling with
-    # dim parallel avg(element_at(__v, i)) aggregates was tried and is
-    # 5x SLOWER at sf0.1 (bench_ab, control in-band): 64 avg aggregates
-    # mean 128 aggregate-buffer fields, past codegen's field limit — the
-    # whole stage (including the per-row argmin fold) drops to
-    # interpreted mode. The posexplode shape below is already scale-
-    # safe: the dim-fold explosion is MAP-SIDE and partial-aggregated
-    # before the exchange, so the shuffle carries k*dim cells.
     for _ in range(n_iter):
-        # per-vector argmin is a map-only expression over the constant
-        # centroid table — the former crossJoin(broadcast)+min_by hash
-        # aggregate shuffled corpus rows with payloads every iteration
         assigned = v.select(
-            "__v",
-            _argmin_cid_expr(
-                F.col("__v"), [vec for _, vec in cents]
-            ).alias("centroid_id"),
+            "__v", _argmin_cid_expr(F.col("__v"), cents).alias("centroid_id")
         )
-        mean_expr = F.avg("x")
-        if round_decimals is not None:
-            mean_expr = pround(mean_expr, round_decimals)
-        means = (
-            assigned.select("centroid_id", F.posexplode("__v").alias("dim", "x"))
-            .groupBy("centroid_id", "dim")
-            .agg(mean_expr.alias("m"))
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                    lambda s: s["m"],
-                ).alias("centroid"),
-                F.first(F.lit(1)).alias("__one"),
-            )
-            .select("centroid_id", "centroid")
-        )
+        means = lloyd_means(assigned, ["centroid_id"], round_decimals)
         new_cents = {r.centroid_id: list(r.centroid) for r in means.collect()}
         # empty clusters keep their previous centroid
         cents = [(cid, new_cents.get(cid, vec)) for cid, vec in cents]
@@ -780,16 +642,12 @@ def semdedup_survivors(
     )
     from prajna_spark.operators.lifecycle import scoped_local_checkpoint
 
-    # assignment is the same map-only argmin expression as the Lloyd
-    # rounds (no crossJoin, no corpus-payload exchange — r11); still
-    # checkpointed eagerly because it feeds BOTH sides of the in-cell
-    # self-join AND the survivor anti-join
+    # the Lloyd rounds' map-only argmin; checkpointed eagerly because it
+    # feeds BOTH sides of the in-cell self-join AND the survivor anti-join
     assigned = scoped_local_checkpoint(
         v.select(
             "__id",
-            _argmin_cid_expr(
-                F.col("__v"), [vec for _, vec in cents]
-            ).alias("centroid_id"),
+            _argmin_cid_expr(F.col("__v"), cents).alias("centroid_id"),
             "__v",
             "__n",
         )

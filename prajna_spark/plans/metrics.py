@@ -23,8 +23,6 @@ measurement can never break the bench itself.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import SparkSession
 
 METRIC_KEYS = (
@@ -113,16 +111,6 @@ def totals_delta(before: dict[str, int], after: dict[str, int]) -> dict[str, int
     delta = {k: after.get(k, 0) - before.get(k, 0) for k in METRIC_KEYS}
     delta["available"] = avail
     return delta
-
-
-def measure_action(
-    spark: SparkSession, action: Callable[[], None]
-) -> dict[str, int]:
-    """Run ``action`` (anything that triggers jobs) and return the stage
-    metric deltas it caused."""
-    before = stage_totals(spark)
-    action()
-    return totals_delta(before, stage_totals(spark))
 
 
 def stage_task_skew(

@@ -71,140 +71,43 @@ def _load_all() -> None:
     )
 
 
-def _recorded_rounds() -> dict[str, dict[int, bool]]:
-    """Read the driver's CORRECTNESS_r*.json ledgers from the repo root:
-    query name -> {round: record_is_green}. Green = hash-verified against
-    the oracle OR the declared rows-only check (``err == "no_oracle"``);
-    anything else (hash mismatch, spark/oracle error) is red. Missing/
-    unreadable files contribute nothing (fresh checkout → every query
-    counts as never-recorded and plain registration order results)."""
+def correctness_ledgers() -> dict[int, dict[str, dict]]:
+    """The CORRECTNESS_r*.json correctness ledgers from the repo root,
+    by round: {round: {query name: record}}. A record is hash-verified when
+    ``hash_match`` is true; ``err == "no_oracle"`` marks the rows-only
+    check. Unreadable files are skipped; a fresh checkout has none, so
+    every query counts as never-recorded."""
     import glob
     import json
     import os
     import re
 
     root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    seen: dict[str, dict[int, bool]] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+    ledgers: dict[int, dict[str, dict]] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
             continue
         try:
             with open(path) as f:
-                data = json.load(f)
+                ledgers[int(m.group(1))] = json.load(f)
         except (OSError, ValueError):
             continue
-        for name, row in data.items():
-            green = bool(row.get("hash_match")) or row.get("err") == "no_oracle"
-            seen.setdefault(name, {})[int(m.group(1))] = green
-    return seen
-
-
-# Queries that PREDATE the current build round yet have never been
-# driver-recorded sort before same-group newer ones: oldest-unverified
-# -first is the staleness principle applied within the never-recorded
-# group (VERDICT r4 "What's missing" item 1 names sample_topk_per_lang
-# as the one such query; listing it explicitly here — rather than
-# encoding it in import order — keeps the prioritization auditable, per
-# the round-4 ADVICE on gate transparency).
-_OLDEST_UNRECORDED = frozenset({"sample_topk_per_lang"})
-
-# Round-6 additions sort AFTER the round-5 never-recorded backlog:
-# VERDICT r5 asked that the backlog (82 queries) drain through the
-# driver's 50-row window in r6+r7, so anything NEW this round must not
-# displace a backlog query from the r6 window. Explicit (not
-# registration-order) for the same auditability reason as above.
-_NEWEST_UNRECORDED = frozenset(
-    {
-        "image_png_roundtrip_meta",
-        # round-7 additions (§2 pytest-only tier -> oracle rows, VERDICT
-        # r6 item 3); pinned behind the 33-query backlog so the r7
-        # window still drains it completely.
-        "map_by_collection_stats",
-        "filter_map_by_key_orders",
-        "repartition_unique_key_isolation",
-        "rows_reorg_partition_profile",
-        "try_find_first_match",
-    }
-)
-
-# Queries whose LAST driver record is red for a reason fixed this round
-# get forced back into the next window even though they are not the
-# stalest rows. SELF-CLEARING (VERDICT r7 "What's wrong" #1): the tier
-# applies only while the query's latest driver record is still red — the
-# moment a green record lands, the name sorts by ordinary staleness
-# again, so membership here never burns window slots after the fix is
-# proven. (r7's two members, pq_encode_embeddings and
-# ivf_kmeans_centroids, both went green in CORRECTNESS_r07 and are now
-# inert; kept as documentation of the mechanism's last use.)
-_FORCE_RERECORD = frozenset({"pq_encode_embeddings", "ivf_kmeans_centroids"})
-
-# Queries whose oracle was UPGRADED this round from the declared
-# rows-only check to a hash-checkable spelling jump into the next window
-# so the first hash verdict actually lands (VERDICT r9 task #2: the HLL
-# rollup had been rows-only since r2; its new spelling audits the
-# estimates against an exact twin in oracle-expressible form).
-# SELF-CLEARING like _FORCE_RERECORD: the tier applies only while the
-# name has NO hash-verified driver record — the first hash_match green
-# returns it to ordinary staleness ordering, so membership never burns
-# window slots after the upgrade is proven.
-_FORCE_HASH_UPGRADE = frozenset({"telemetry_distinct_users_hll"})
-
-
-def _ever_hash_verified() -> set[str]:
-    """Names with at least one hash-verified driver record (hash_match
-    true in any CORRECTNESS_r*.json) — rows-only greens don't count."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    out: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        out.update(name for name, row in data.items() if row.get("hash_match"))
-    return out
+    return ledgers
 
 
 def _staleness_order(names: list[str]) -> list[str]:
-    """Order queries never-driver-recorded first (oldest catalog entries
-    leading — see _OLDEST_UNRECORDED), then by oldest last-recorded
-    round, ties by name. The driver's correctness gate records a bounded
-    prefix of the registry each round, so this ordering guarantees every
-    query's staleness stays bounded by ceil(catalog_size / window_size)
-    rounds — explicitly, with no coupling to import order.
-    ``tools/coverage_ledger.py`` prints the same ledger."""
-    seen = _recorded_rounds()
-    hash_ok = _ever_hash_verified()
-
-    def sort_key(name: str):
-        rounds = seen.get(name)
-        if not rounds:
-            if name in _OLDEST_UNRECORDED:
-                tier = 0
-            elif name in _NEWEST_UNRECORDED:
-                tier = 2
-            else:
-                tier = 1
-            return (0, tier, name)
-        latest = max(rounds)
-        if not rounds[latest] and name in _FORCE_RERECORD:
-            # latest record still red AND a fix is declared shipped:
-            # sorts with the never-recorded block (after it), ahead of
-            # every already-recorded row. Once a green record lands the
-            # branch stops firing — self-clearing.
-            return (0, 3, name)
-        if name in _FORCE_HASH_UPGRADE and name not in hash_ok:
-            # oracle upgraded from rows-only: jump the queue until the
-            # first hash_match record lands — self-clearing.
-            return (0, 4, name)
-        return (1, latest, name)
-
-    return sorted(names, key=sort_key)
+    """Order queries never-recorded first, then by oldest last-recorded
+    round, ties by name. The correctness gate records a bounded prefix
+    of the registry each round, so every query's staleness stays
+    bounded by ceil(catalog_size / window_size) rounds, with no coupling
+    to import order. ``tools/coverage_ledger.py`` prints the same
+    ledger."""
+    last: dict[str, int] = {}
+    for rnd, data in correctness_ledgers().items():
+        for name in data:
+            last[name] = max(rnd, last.get(name, rnd))
+    return sorted(names, key=lambda n: (n in last, last.get(n, 0), n))
 
 
 def registry() -> dict[str, QuerySpec]:

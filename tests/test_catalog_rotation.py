@@ -9,108 +9,48 @@ from __future__ import annotations
 
 import os
 
-from prajna_spark.queries import _recorded_rounds, _staleness_order, registry
+from prajna_spark.queries import _staleness_order, correctness_ledgers, registry
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PINNED_ORDER = os.path.join(REPO, "tests", "data", "registry_order_r12.txt")
+
+
+def _last_round() -> dict[str, int]:
+    last: dict[str, int] = {}
+    for rnd, data in correctness_ledgers().items():
+        for name in data:
+            last[name] = max(rnd, last.get(name, rnd))
+    return last
+
+
+def test_order_pinned_at_round_12(monkeypatch):
+    """The 246-query order registry() produced from the CORRECTNESS_r01
+    to r12 ledgers. Later ledgers are masked, so the pin holds as new
+    rounds land, and any change to the ordering rule shows here."""
+    import prajna_spark.queries as q
+
+    with open(PINNED_ORDER) as f:
+        pinned = f.read().split()
+    assert len(pinned) == 246
+    ledgers = q.correctness_ledgers()
+    monkeypatch.setattr(
+        q, "correctness_ledgers", lambda: {r: d for r, d in ledgers.items() if r <= 12}
+    )
+    assert q._staleness_order(sorted(pinned)) == pinned
 
 
 def test_order_is_staleness_monotone():
-    from prajna_spark.queries import (
-        _FORCE_HASH_UPGRADE,
-        _FORCE_RERECORD,
-        _ever_hash_verified,
-    )
-
-    seen = _recorded_rounds()
-    hash_ok = _ever_hash_verified()
-    names = list(registry().keys())
-
-    def still_forced(n: str) -> bool:
-        # both forced tiers are self-clearing: red-latest for
-        # _FORCE_RERECORD, no-hash-record-yet for _FORCE_HASH_UPGRADE
-        rounds = seen.get(n)
-        if not rounds:
-            return False
-        if n in _FORCE_RERECORD and not rounds[max(rounds)]:
-            return True
-        return n in _FORCE_HASH_UPGRADE and n not in hash_ok
-
     # last-recorded round must be non-decreasing along the ordering, with
-    # never-recorded (treated as round -inf) leading — EXCEPT actively-
-    # forced entries (red last record whose fix shipped this round, or an
-    # oracle upgraded from rows-only awaiting its first hash verdict),
-    # which deliberately jump the staleness queue to land in the very
-    # next driver window.
-    ordered = [n for n in names if not still_forced(n)]
-    last_rounds = [
-        max(seen[n]) if n in seen and seen[n] else -1 for n in ordered
-    ]
+    # never-recorded (treated as round -1) leading
+    last = _last_round()
+    last_rounds = [last.get(n, -1) for n in registry()]
     assert last_rounds == sorted(last_rounds)
-    # actively-forced entries sit immediately after the never-recorded block
-    never_count = sum(1 for n in names if not seen.get(n))
-    forced_active = [
-        n for n in (_FORCE_RERECORD | _FORCE_HASH_UPGRADE) if still_forced(n)
-    ]
-    for n in forced_active:
-        idx = names.index(n)
-        assert never_count <= idx < never_count + len(forced_active)
-
-
-def test_forced_tier_self_clears(monkeypatch):
-    """A _FORCE_RERECORD member with a GREEN latest record sorts by
-    ordinary staleness (no pinning); the same member with a RED latest
-    record jumps to the head of the recorded block (VERDICT r7 'What's
-    wrong' #1 — green members must stop burning window slots)."""
-    import prajna_spark.queries as q
-
-    monkeypatch.setattr(q, "_FORCE_RERECORD", frozenset({"forced_q"}))
-    names = ["zz_fresh", "forced_q", "aa_stale"]
-
-    # red latest record -> pinned right after the never-recorded block
-    monkeypatch.setattr(
-        q,
-        "_recorded_rounds",
-        lambda: {"forced_q": {3: True, 7: False}, "aa_stale": {3: True},
-                 "zz_fresh": {7: True}},
-    )
-    assert q._staleness_order(names) == ["forced_q", "aa_stale", "zz_fresh"]
-
-    # green latest record -> cleared; ordinary staleness (r7 ties, name)
-    monkeypatch.setattr(
-        q,
-        "_recorded_rounds",
-        lambda: {"forced_q": {3: False, 7: True}, "aa_stale": {3: True},
-                 "zz_fresh": {7: True}},
-    )
-    assert q._staleness_order(names) == ["aa_stale", "forced_q", "zz_fresh"]
-
-
-def test_hash_upgrade_tier_self_clears(monkeypatch):
-    """A _FORCE_HASH_UPGRADE member with no hash-verified record jumps
-    the queue (after _FORCE_RERECORD's slot); once any hash_match record
-    exists it sorts by ordinary staleness again."""
-    import prajna_spark.queries as q
-
-    monkeypatch.setattr(q, "_FORCE_RERECORD", frozenset())
-    monkeypatch.setattr(q, "_FORCE_HASH_UPGRADE", frozenset({"upg_q"}))
-    names = ["zz_fresh", "upg_q", "aa_stale"]
-    monkeypatch.setattr(
-        q,
-        "_recorded_rounds",
-        lambda: {"upg_q": {9: True}, "aa_stale": {3: True}, "zz_fresh": {7: True}},
-    )
-    # rows-only greens so far -> pinned ahead of the recorded block
-    monkeypatch.setattr(q, "_ever_hash_verified", lambda: set())
-    assert q._staleness_order(names) == ["upg_q", "aa_stale", "zz_fresh"]
-    # first hash verdict landed -> ordinary staleness (r9 sorts last)
-    monkeypatch.setattr(q, "_ever_hash_verified", lambda: {"upg_q"})
-    assert q._staleness_order(names) == ["aa_stale", "zz_fresh", "upg_q"]
 
 
 def test_never_recorded_lead_the_window():
-    seen = _recorded_rounds()
+    last = _last_round()
     names = list(registry().keys())
-    never = {n for n in names if not seen.get(n)}
+    never = {n for n in names if n not in last}
     assert set(names[: len(never)]) == never
 
 
@@ -122,28 +62,8 @@ def test_ordering_is_deterministic_and_complete():
     assert _staleness_order(a) == a
 
 
-def test_pinned_groups_bracket_the_never_recorded_block():
-    """Within the never-recorded block, _OLDEST_UNRECORDED entries sort
-    first and _NEWEST_UNRECORDED entries sort LAST — new-this-round
-    queries must not displace the round-5 backlog from the driver's
-    bounded recording window (VERDICT r5 ask #1)."""
-    from prajna_spark.queries import _NEWEST_UNRECORDED, _OLDEST_UNRECORDED
-
-    seen = _recorded_rounds()
-    names = list(registry().keys())
-    never = [n for n in names if not seen.get(n)]
-    for pinned in _OLDEST_UNRECORDED & set(never):
-        others = [n for n in never if n not in _OLDEST_UNRECORDED]
-        if others:
-            assert never.index(pinned) < min(never.index(n) for n in others)
-    for pinned in _NEWEST_UNRECORDED & set(never):
-        others = [n for n in never if n not in _NEWEST_UNRECORDED]
-        if others:
-            assert never.index(pinned) > max(never.index(n) for n in others)
-
-
 def test_ledgers_exist_here():
     # In this repo the driver ledgers are present; the ordering must be
-    # reading them (if this fails, _recorded_rounds' root path is wrong).
+    # reading them (if this fails, correctness_ledgers' root path is wrong).
     if any(f.startswith("CORRECTNESS_r") for f in os.listdir(REPO)):
-        assert _recorded_rounds(), "ledgers present on disk but none parsed"
+        assert correctness_ledgers(), "ledgers present on disk but none parsed"

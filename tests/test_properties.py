@@ -10,6 +10,9 @@ all-identical keys), not in volume.
 
 from __future__ import annotations
 
+import math
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -989,3 +992,61 @@ def test_k_core_matches_local_peeling(spark, edges, k):
         for r in k_core(df, k, max_rounds=30).collect()
     }
     assert got == _local_kcore(edges, k)
+
+
+# ------------------------------------------------------ first_extremum
+# Few distinct keys force ties; NaN, infinities and nulls exercise the
+# ordering edges. Each example is a batch of arrays scored in one job.
+_NAN = float("nan")
+_key_strategy = st.one_of(
+    st.none(),
+    st.sampled_from([0.0, 1.0, -1.0, 2.5, _NAN, float("inf"), float("-inf")]),
+    st.floats(allow_nan=True),
+)
+# shapes every batch carries: empty, all-null, NaN-only, first-NaN, ties
+_FIXED_KEY_ARRAYS = [
+    [],
+    [None, None],
+    [_NAN, _NAN],
+    [_NAN, 1.0, _NAN, 1.0],
+    [None, 2.0, 2.0, None, 2.0],
+]
+
+
+def _spark_less(a: float, b: float) -> bool:
+    """Spark's double ordering: NaN above every number, NaN == NaN."""
+    if math.isnan(a):
+        return False
+    return math.isnan(b) or a < b
+
+
+def _first_extremum_local(keys, minimize: bool):
+    best = None
+    for i, k in enumerate(keys):
+        if k is None:
+            continue
+        if best is None or (
+            _spark_less(k, keys[best]) if minimize else _spark_less(keys[best], k)
+        ):
+            best = i
+    return best
+
+
+@pytest.mark.parametrize("minimize", [True, False])
+@given(batch=st.lists(st.lists(_key_strategy, max_size=8), max_size=12))
+@settings(**SETTINGS)
+def test_first_extremum_matches_local_model(spark, minimize, batch):
+    """first_extremum keeps the first winner on ties, skips null keys,
+    gives null for an all-null or empty array, and orders NaN above every
+    number (a maximum keeps the first NaN; a minimum is NaN only when
+    every key is) — the array_min/array_max + array_position contract the
+    IVF, PQ and k-means argmins rely on."""
+    from prajna_spark.pipeline.similarity import first_extremum
+
+    arrays = _FIXED_KEY_ARRAYS + batch
+    df = spark.createDataFrame(list(enumerate(arrays)), "id long, xs array<double>")
+    scored = F.transform("xs", lambda x, i: F.struct(x.alias("k"), i.alias("i")))
+    best = first_extremum(scored, "struct<k:double,i:int>", "k", "i", minimize)
+    got = {r.id: r.i for r in df.select("id", best["i"].alias("i")).collect()}
+    want = {i: _first_extremum_local(xs, minimize) for i, xs in enumerate(arrays)}
+    assert got == want

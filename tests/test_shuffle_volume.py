@@ -11,6 +11,8 @@ viable at 100 TB: a corpus 1000x wider in bytes shuffles the same rows.
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -83,11 +85,15 @@ def test_minhash_shuffle_rows_are_narrow_and_linear_in_docs(spark):
 
 def _random_edges(spark, n_nodes: int, n_edges: int, seed: int = 0):
     """Deterministic pseudo-random directed edge list (hash-mixed, no
-    RNG state — retry/speculation stable like the samplers)."""
+    RNG state — retry/speculation stable like the samplers). Edge i's
+    endpoints come from md5(seed, i), so distinct edges grow with
+    ``n_edges``; an affine map of i mod n_nodes would repeat with period
+    n_nodes and give every larger ``n_edges`` the same edge set."""
     rows = []
     for i in range(n_edges):
-        u = (i * 2654435761 + seed) % n_nodes
-        v = (i * 40503 + seed * 7 + 1) % n_nodes
+        h = hashlib.md5(f"{seed}|{i}".encode()).digest()
+        u = int.from_bytes(h[:8], "little") % n_nodes
+        v = int.from_bytes(h[8:], "little") % n_nodes
         if u != v:
             rows.append((u, v))
     return spark.createDataFrame(rows, "src long, dst long")

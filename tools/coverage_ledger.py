@@ -16,37 +16,20 @@ Usage:
 """
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-
-def load_rounds() -> dict[int, dict]:
-    rounds = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        with open(path) as f:
-            rounds[int(m.group(1))] = json.load(f)
-    return rounds
-
-
-def catalog_names() -> list[str]:
-    sys.path.insert(0, REPO)
-    from prajna_spark.queries import registry
-
-    return list(registry().keys())
+from prajna_spark.queries import correctness_ledgers, registry  # noqa: E402
 
 
 def build_ledger() -> dict:
-    rounds = load_rounds()
+    rounds = correctness_ledgers()
     latest = max(rounds) if rounds else 0
-    names = catalog_names()
+    names = list(registry().keys())
     ledger = {}
     for name in names:
         seen = sorted(r for r, data in rounds.items() if name in data)
@@ -69,22 +52,14 @@ def build_ledger() -> dict:
     return {"latest_round": latest, "queries": ledger}
 
 
-def staleness_order() -> list[str]:
-    """The canonical rotation order — exactly what registry() emits (the
-    driver's bounded window records a prefix of this)."""
-    sys.path.insert(0, REPO)
-    from prajna_spark.queries import registry
-
-    return list(registry().keys())
-
-
 def main() -> int:
     ledger = build_ledger()
     if "--json" in sys.argv:
         print(json.dumps(ledger, indent=2))
         return 0
     if "--order" in sys.argv:
-        for n in staleness_order():
+        # the rotation order: the correctness gate records a prefix of it
+        for n in ledger["queries"]:
             print(n)
         return 0
     rows = ledger["queries"]
@@ -92,39 +67,6 @@ def main() -> int:
     fails = [n for n, r in rows.items() if r["last_verdict"] == "FAIL"]
     print(f"catalog: {len(rows)} queries; latest driver round: r{ledger['latest_round']}")
     print(f"never driver-recorded: {len(never)}" + (f" -> {never}" if never else ""))
-    from prajna_spark.queries import (
-        _FORCE_RERECORD,
-        _NEWEST_UNRECORDED,
-        _OLDEST_UNRECORDED,
-    )
-
-    pinned_first = sorted(n for n in never if n in _OLDEST_UNRECORDED)
-    pinned_last = sorted(n for n in never if n in _NEWEST_UNRECORDED)
-    # The forced tier is self-clearing: it only applies while the latest
-    # driver record is red (mirrors queries/__init__.py sort_key).
-    forced = sorted(
-        n for n in rows if n in _FORCE_RERECORD and rows[n]["last_verdict"] == "FAIL"
-    )
-    cleared = sorted(
-        n for n in rows if n in _FORCE_RERECORD and rows[n]["last_verdict"] != "FAIL"
-    )
-    if pinned_first:
-        print(f"  pinned FIRST in rotation (oldest catalog entries): {pinned_first}")
-    if pinned_last:
-        print(
-            "  pinned LAST in rotation (new this round; must not displace"
-            f" the backlog): {pinned_last}"
-        )
-    if forced:
-        print(
-            "  forced re-record (red last record, fix shipped;"
-            f" sorts right after the never-recorded block): {forced}"
-        )
-    if cleared:
-        print(
-            "  forced-tier entries CLEARED (green record landed; ordinary"
-            f" staleness applies): {cleared}"
-        )
     print(f"driver FAIL at last record: {len(fails)}" + (f" -> {fails}" if fails else ""))
     by_staleness: dict[int, list[str]] = {}
     for n, r in rows.items():
