@@ -4,17 +4,18 @@ Reference analog: Prajna expresses iterative graph passes as repeated
 DSet self-mixes driven from the driver (paper §3's iterative-map pattern;
 /root/reference/src/CoreLib/DSetGenerics.fs:1127 ``mapByCollection`` +
 fold loops). Spark-first spelling: a driver loop of frontier⋈edges hash
-joins with localCheckpoint per round — the same discipline as
-pipeline.dedup.connected_components (plan/lineage O(1), superseded
-checkpoints released eagerly, SHUFFLE_HASH hints so no per-round
-broadcast build competes for the shared local heap).
+joins, one checkpointed generation per round
+(:func:`prajna_spark.operators.lifecycle.iterate_checkpointed`), with
+SHUFFLE_HASH hints so no per-round broadcast build competes for the
+shared local heap.
 
 Scale notes (100 TB contract):
 - per round the only edge-cardinality shuffle is frontier⋈edges keyed on
   the node id; the visited set and frontier are node-cardinality;
-- the frontier naturally shrinks once the reachable set saturates; the
-  early-exit reads the frontier's count from the SAME observe() that
-  rides the checkpoint job — no extra count() job per round;
+- the state is ONE visited(nid, hops) frame and the frontier is its
+  newest hop, so a round is one checkpoint; the early exit reads the
+  newest hop from the observe() that rides that checkpoint job — no
+  extra count() job per round;
 - distances are correct-by-construction minima: a node enters the
   visited set the first round it is reached, and later arrivals are
   anti-joined away.
@@ -24,9 +25,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Observation
 
 from prajna_spark.operators.lifecycle import (
+    iterate_checkpointed,
     release_local_checkpoint,
     scoped_local_checkpoint,
 )
@@ -51,41 +52,28 @@ def multi_source_bfs(
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     e = e.transform(scoped_local_checkpoint)
 
-    frontier = (
-        seeds.select(F.col(id_col).alias("nid")).distinct().transform(scoped_local_checkpoint)
-    )
-    visited = frontier.withColumn("hops", F.lit(0).cast("long"))
-    visited = visited.transform(scoped_local_checkpoint)
-
-    for hop in range(1, max_hops + 1):
+    def step(visited: DataFrame, hop: int) -> DataFrame:
+        frontier = visited.where(F.col("hops") == hop - 1)
         reached = (
             e.join(frontier.hint("SHUFFLE_HASH"), e.src == frontier.nid)
             .select(F.col("dst").alias("nid"))
             .distinct()
         )
-        obs = Observation()
-        new_frontier = (
-            reached.join(visited.hint("SHUFFLE_HASH"), "nid", "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .transform(scoped_local_checkpoint)
-        )
-        release_local_checkpoint(frontier)
-        frontier = new_frontier
-        if (obs.get["n"] or 0) == 0:
-            break
-        prev_visited = visited
-        visited = visited.unionAll(
-            frontier.withColumn("hops", F.lit(hop).cast("long"))
-        ).transform(scoped_local_checkpoint)
-        release_local_checkpoint(prev_visited)
+        fresh = reached.join(visited.hint("SHUFFLE_HASH"), "nid", "left_anti")
+        return visited.unionAll(fresh.withColumn("hops", F.lit(hop).cast("long")))
 
-    out = visited.select(F.col("nid").alias("node_id"), "hops").transform(
-        scoped_local_checkpoint
+    visited = (
+        seeds.select(F.col(id_col).alias("nid"))
+        .distinct()
+        .withColumn("hops", F.lit(0).cast("long"))
+        .transform(scoped_local_checkpoint)
     )
-    release_local_checkpoint(visited)
-    release_local_checkpoint(frontier)
+    # stop once a round reached no new node: its hop is then not the max
+    visited, _ = iterate_checkpointed(
+        visited, step, max_hops, stop=(F.max("hops"), lambda top, hop: top != hop)
+    )
     release_local_checkpoint(e)
-    return out
+    return visited.select(F.col("nid").alias("node_id"), "hops")
 
 
 def bounded_sssp(
@@ -105,18 +93,24 @@ def bounded_sssp(
     nodes absent.
 
     Each round is one edge-cardinality hash join (dist side SHUFFLE_HASH
-    — no per-round broadcast build) + a node-keyed min aggregation;
-    localCheckpoint keeps plan/lineage O(1) and superseded rounds are
-    released eagerly. Distances accumulate left-associatively per hop
-    (d + w at each relaxation), the exact op sequence the oracle's
-    unrolled ladder replays — min over IEEE doubles is engine-portable,
-    so bounded-SSSP is hash-checkable, no rounding slack needed beyond
-    the final display rounding."""
+    — no per-round broadcast build) + a node-keyed min aggregation, one
+    checkpointed generation (:func:`iterate_checkpointed`). Distances
+    accumulate left-associatively per hop (d + w at each relaxation),
+    the exact op sequence the oracle's unrolled ladder replays — min
+    over IEEE doubles is engine-portable, so bounded-SSSP is
+    hash-checkable, no rounding slack needed beyond the final display
+    rounding."""
     e = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
         F.col(weight_col).cast("double").alias("w"),
     ).transform(scoped_local_checkpoint)
+
+    def step(dist: DataFrame, _: int) -> DataFrame:
+        cand = e.join(dist.hint("SHUFFLE_HASH"), e.src == dist.nid).select(
+            F.col("dst").alias("nid"), (F.col("dist") + F.col("w")).alias("dist")
+        )
+        return dist.unionAll(cand).groupBy("nid").agg(F.min("dist").alias("dist"))
 
     dist = (
         seeds.select(F.col(id_col).alias("nid"))
@@ -124,21 +118,8 @@ def bounded_sssp(
         .withColumn("dist", F.lit(0.0))
         .transform(scoped_local_checkpoint)
     )
-    for _ in range(max_hops):
-        cand = e.join(dist.hint("SHUFFLE_HASH"), e.src == dist.nid).select(
-            F.col("dst").alias("nid"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-        prev = dist
-        dist = (
-            dist.unionAll(cand)
-            .groupBy("nid")
-            .agg(F.min("dist").alias("dist"))
-            .transform(scoped_local_checkpoint)
-        )
-        release_local_checkpoint(prev)
-    out = dist.select(
-        F.col("nid").alias("node_id"), F.round("dist", decimals).alias("dist")
-    ).transform(scoped_local_checkpoint)
-    release_local_checkpoint(dist)
+    dist, _ = iterate_checkpointed(dist, step, max_hops)
     release_local_checkpoint(e)
-    return out
+    return dist.select(
+        F.col("nid").alias("node_id"), F.round("dist", decimals).alias("dist")
+    )

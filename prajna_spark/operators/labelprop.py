@@ -16,16 +16,23 @@ schedule EXACTLY.
 Scale shape per iteration: one neighbor-label join (edge-cardinality,
 narrow (node, label) rows, SHUFFLE_HASH pinned so the build side never
 broadcasts a corpus-sized frame) + one (node, label) count + one
-per-node argmax window. localCheckpoint truncates lineage each round;
-superseded checkpoints are released. Synchronous updates can oscillate
-on bipartite-ish structures — the iteration count is a BUDGET, not a
-convergence promise, and identical on both engines by construction.
+per-node argmax hash aggregate (``min_by``). Synchronous updates can
+oscillate on bipartite-ish structures — the iteration count is a BUDGET,
+not a convergence promise, and identical on both engines by
+construction.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from prajna_spark.operators.lifecycle import (
+    iterate_checkpointed,
+    release_local_checkpoint,
+    scoped_local_checkpoint,
+)
+from prajna_spark.operators.symmetry import symmetrize, undirected_edges
 
 
 def label_propagation(
@@ -36,23 +43,34 @@ def label_propagation(
 ) -> DataFrame:
     """Run ``n_iter`` synchronous LP rounds; returns (node_id, community)
     where community is the surviving label (node ids seed labels)."""
-    from prajna_spark.operators.lifecycle import (
-        release_local_checkpoint,
-        scoped_local_checkpoint,
-    )
-
-    from prajna_spark.operators.symmetry import symmetrize
-
-    e = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).where(F.col("u") != F.col("v"))
-    und = e.select(
-        F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-    ).distinct()
     # one-pass symmetrization: the union spelling ran the caller's edge
     # derivation + distinct twice inside this checkpoint job (r11)
-    sym = symmetrize(und, "a", "b")
+    sym = symmetrize(undirected_edges(edges, src_col, dst_col), "a", "b")
     sym = sym.transform(scoped_local_checkpoint)
+
+    # one checkpointed generation per TWO rounds (plus a single round
+    # when n_iter is odd): each label frame has exactly ONE consumer (the
+    # next round's join), so the odd round can stay lazy — its join +
+    # aggregates execute once, inside the next checkpoint's job —
+    # halving the blocking materializations and job dispatches per run
+    # (r12, guide §2.4). Lineage depth stays <= 2 rounds, and checkpoint
+    # placement cannot change values (integer label counting).
+    def step(labels: DataFrame, i: int) -> DataFrame:
+        for _ in range(2 if 2 * i <= n_iter else 1):
+            nbr = sym.join(
+                labels.hint("SHUFFLE_HASH"), sym.b == labels.nid
+            ).select(F.col("a").alias("node"), "lbl")
+            counts = nbr.groupBy("node", "lbl").agg(F.count(F.lit(1)).alias("c"))
+            # per-node argmax as a hash AGGREGATE, not a window: min_by
+            # over the (-count, label) composite realizes the same
+            # (count desc, label asc) tie-break, partial-aggregates
+            # map-side, and skips the window's per-partition sort (r11)
+            labels = counts.groupBy(F.col("node").alias("nid")).agg(
+                F.min_by(
+                    "lbl", F.struct((-F.col("c")).alias("nc"), F.col("lbl"))
+                ).alias("lbl")
+            )
+        return labels
 
     labels = (
         sym.select(F.col("a").alias("nid"))
@@ -60,35 +78,7 @@ def label_propagation(
         .select("nid", F.col("nid").alias("lbl"))
         .transform(scoped_local_checkpoint)
     )
-    last_ckpt = labels
-    for i in range(n_iter):
-        nbr = sym.join(
-            labels.hint("SHUFFLE_HASH"), sym.b == labels.nid
-        ).select(F.col("a").alias("node"), "lbl")
-        counts = nbr.groupBy("node", "lbl").agg(F.count(F.lit(1)).alias("c"))
-        # per-node argmax as a hash AGGREGATE, not a window: min_by over
-        # the (-count, label) composite realizes the same
-        # (count desc, label asc) tie-break, partial-aggregates map-side,
-        # and skips the window's per-partition sort (r11)
-        nxt = counts.groupBy(F.col("node").alias("nid")).agg(
-            F.min_by(
-                "lbl", F.struct((-F.col("c")).alias("nc"), F.col("lbl"))
-            ).alias("lbl")
-        )
-        # checkpoint every SECOND generation (and the last): each label
-        # frame has exactly ONE consumer (the next round's join), so an
-        # odd generation can stay lazy — its join+aggregates execute
-        # once, inside the next checkpoint's job — halving the blocking
-        # materializations and job dispatches per run (r12, guide §2.4;
-        # the VERDICT item-5 "batch 2 rounds per checkpoint" lever).
-        # Lineage depth stays <= 2 rounds, far under Catalyst's ~15-
-        # round stack limit, and checkpoint placement cannot change
-        # values (integer label counting, no nondeterminism to pin).
-        if i % 2 == 1 or i == n_iter - 1:
-            nxt = nxt.transform(scoped_local_checkpoint)
-            release_local_checkpoint(last_ckpt)
-            last_ckpt = nxt
-        labels = nxt
+    labels, _ = iterate_checkpointed(labels, step, (n_iter + 1) // 2)
     # the edge checkpoint is EDGE-cardinality — the one frame here whose
     # leak compounds across queries in a shared session (found live:
     # the 30x fixture's second LP-family query OOM'd a 24 GB heap on the

@@ -18,21 +18,25 @@ deterministic release wraps use in the scope::
 Outside any scope the behavior is unchanged (the session owns the cache
 until it dies — fine for one-shot jobs, the driver gate, and tests that
 reuse the frames). Scopes nest; each persist belongs to the innermost
-active scope.
+active scope of the calling thread.
 """
 
 from __future__ import annotations
 
 import logging
+from collections.abc import Callable
 from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Any
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 _log = logging.getLogger(__name__)
 
-_ACTIVE: list[list[DataFrame]] = []
-_ACTIVE_CKPT: list[list[DataFrame]] = []
+# open scopes, innermost last: an immutable stack of (persists,
+# checkpoints) bags per thread, so no thread registers into another's
+_SCOPES: ContextVar[tuple] = ContextVar("persist_scopes", default=())
 
 
 def scoped_persist(
@@ -41,8 +45,9 @@ def scoped_persist(
     """persist() that registers with the innermost persist_scope (no-op
     registration when no scope is active)."""
     p = df.persist(level)
-    if _ACTIVE:
-        _ACTIVE[-1].append(p)
+    scopes = _SCOPES.get()
+    if scopes:
+        scopes[-1][0].append(p)
     return p
 
 
@@ -53,14 +58,11 @@ def scoped_local_checkpoint(
 
     ``unpersist`` is a silent no-op for checkpointed frames (see
     :func:`release_local_checkpoint`), so scope exit releases these via
-    the LogicalRDD leaf directly. Iterative operators route EVERY
-    generation through this: superseded generations they release
-    themselves mid-loop stay released (double-release is a no-op), and
-    the FINAL generation — which previously outlived the query until an
-    eventual JVM GC, the exact mechanism behind the r7 label-propagation
-    leak — is freed deterministically at scope exit. Outside any scope
-    the behavior is plain localCheckpoint (session-lifetime blocks), as
-    before.
+    the LogicalRDD leaf directly: a loop's FINAL generation — which
+    once outlived the query until an eventual JVM GC, the r7
+    label-propagation leak — is freed at scope exit (double-release of
+    a superseded one is a no-op). Outside any scope the behavior is
+    plain localCheckpoint (session-lifetime blocks).
 
     ``parent=True`` registers with the ENCLOSING scope instead: for a
     checkpoint that materializes a function's RETURN VALUE inside that
@@ -81,9 +83,9 @@ def scoped_local_checkpoint(
     blocks are exact byte buffers: compact, evictable, and deserialized
     incrementally on read."""
     c = df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    bags = _ACTIVE_CKPT[:-1] if parent else _ACTIVE_CKPT
-    if bags:
-        bags[-1].append(c)
+    scopes = _SCOPES.get()[:-1] if parent else _SCOPES.get()
+    if scopes:
+        scopes[-1][1].append(c)
     return c
 
 
@@ -129,13 +131,11 @@ def persist_scope():
     scoped_local_checkpoint made inside the block on exit."""
     bag: list[DataFrame] = []
     ckpts: list[DataFrame] = []
-    _ACTIVE.append(bag)
-    _ACTIVE_CKPT.append(ckpts)
+    token = _SCOPES.set(_SCOPES.get() + ((bag, ckpts),))
     try:
         yield bag
     finally:
-        _ACTIVE.pop()
-        _ACTIVE_CKPT.pop()
+        _SCOPES.reset(token)
         for df in bag:
             # blocking: scope exit is the deterministic release point —
             # callers rely on storage being back at baseline right after
@@ -158,12 +158,8 @@ def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> None:
     goes through that leaf's RDD directly.
 
     Call it on the checkpointed frame (or a narrow projection of one)
-    once nothing reachable needs it: the iterative operators (connected
-    components, PageRank) release each superseded generation to keep
-    live checkpoint storage bounded at ~2 generations instead of one per
-    iteration — in local mode driver and executors share a single heap,
-    and unbounded pinned generations starve AQE broadcast builds
-    (observed at 10x data, commit be7318d's dense-graph OOM).
+    once nothing reachable needs it (:func:`iterate_checkpointed`'s
+    superseded generations, a loop's invariant inputs after the loop).
 
     Only ``LogicalRDD`` leaves are touched; any other plan shape is left
     alone. Do NOT call it on a frame that JOINS a still-needed
@@ -175,3 +171,50 @@ def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> None:
         node = leaves.apply(i)
         if node.getClass().getSimpleName() == "LogicalRDD":
             node.rdd().unpersist(blocking)
+
+
+def iterate_checkpointed(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame | None],
+    max_rounds: int,
+    stop: tuple[Column, Callable[[Any, int], bool]] | None = None,
+) -> tuple[DataFrame, bool]:
+    """The checkpointed driver loop: ``state = step(state, i)`` for
+    ``i = 1..max_rounds``, one materialized generation per round.
+    Returns ``(final_state, stopped)``; ``stopped`` is False when the
+    loop ran out of rounds.
+
+    ``state`` is a checkpointed frame (or a projection of one) that
+    nothing else reads. ``step`` builds the next generation LAZILY from
+    it; the loop materializes that with ONE eager
+    :func:`scoped_local_checkpoint` job, then releases the generation it
+    replaces. Why every generation is checkpointed and released:
+
+    - ``persist`` does not truncate lineage: a chain of per-round joins
+      grows a plan Catalyst cannot even print, and it overflows its
+      stack near 15 rounds. A checkpoint keeps plan AND lineage O(1);
+    - at most TWO generations stay pinned (the one being read and the
+      one just written). In local mode driver and executors share one
+      heap, and unbounded pinned generations starved AQE's broadcast
+      builds at 10x data (the dense-graph OOM of commit be7318d);
+    - ``Dataset.unpersist()`` is a silent no-op on a checkpoint, so the
+      release goes through :func:`release_local_checkpoint`.
+
+    ``stop=(aggregate, done)`` ends the loop early. The aggregate rides
+    the checkpoint job through ``observe()`` — no extra ``count()`` job
+    per round — and ``done(value, i)`` reads it after round ``i``. A
+    ``step`` that returns None (nothing left to do) also ends the loop,
+    with ``state`` unchanged."""
+    for i in range(1, max_rounds + 1):
+        nxt = step(state, i)
+        if nxt is None:
+            return state, True
+        if stop is not None:
+            obs = Observation()
+            nxt = nxt.observe(obs, stop[0].alias("__stop"))
+        nxt = scoped_local_checkpoint(nxt)
+        release_local_checkpoint(state)
+        state = nxt
+        if stop is not None and stop[1](obs.get["__stop"], i):
+            return state, True
+    return state, False

@@ -1,14 +1,11 @@
 """Distributed PageRank — fixed-iteration power method on a DataFrame
 edge list.
 
-The third iterative-algorithm operator (after connected components,
-pipeline/dedup.py:368, and Lloyd k-means, pipeline/similarity.py:432),
-sharing their hard-won loop discipline:
+One of the checkpointed driver loops
+(:func:`prajna_spark.operators.lifecycle.iterate_checkpointed` owns the
+per-generation checkpoint and release), with the graph tier's join
+discipline:
 
-- localCheckpoint per iteration (persist does NOT truncate lineage; an
-  unbounded join chain stack-overflows Catalyst around 15 rounds);
-- superseded checkpoints unpersisted immediately (bounded generations —
-  local mode shares one heap between driver and executors);
 - SHUFFLE_HASH hints on every rank-cardinality join side (a broadcast
   build of a node-cardinality frame is never right at scale, and AQE's
   attempted local-mode broadcasts OOM on dense graphs — the connected-
@@ -32,6 +29,7 @@ from pyspark.sql import functions as F
 
 from prajna_spark.functions.rounding import pround
 from prajna_spark.operators.lifecycle import (
+    iterate_checkpointed,
     release_local_checkpoint,
     scoped_local_checkpoint,
 )
@@ -74,7 +72,8 @@ def pagerank(
     )
 
     base = float(1.0 - damping)
-    for _ in range(n_iter):
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         contrib = (
             e.join(ranks.hint("SHUFFLE_HASH"), e.src == ranks.nid)
             .join(deg.hint("SHUFFLE_HASH"), "src")
@@ -85,7 +84,7 @@ def pagerank(
             ranks.join(deg.hint("SHUFFLE_HASH"), ranks.nid == deg.src, "left_anti")
             .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("dang"))
         )
-        new_ranks = (
+        return (
             nodes.crossJoin(F.broadcast(n_df))
             .crossJoin(F.broadcast(dangling))
             .join(contrib.hint("SHUFFLE_HASH"), nodes.nid == contrib.dst, "left")
@@ -98,14 +97,9 @@ def pagerank(
                     round_decimals,
                 ).alias("r"),
             )
-            .transform(scoped_local_checkpoint)
         )
-        prev = ranks
-        ranks = new_ranks
-        # release the superseded generation's checkpoint blocks — plain
-        # Dataset.unpersist() would be a no-op here (see lifecycle)
-        release_local_checkpoint(prev)
 
+    ranks, _ = iterate_checkpointed(ranks, step, n_iter)
     out = ranks.select(F.col("nid").alias("node_id"), F.col("r").alias("pr"))
     # the result depends only on the final ranks checkpoint (lineage was
     # severed); the iteration-invariant inputs can be released now

@@ -21,6 +21,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def undirected_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The simple undirected graph of a directed edge list: self-loops
+    dropped, each edge once as ``(a, b)`` with ``a < b``. Lazy: callers
+    checkpoint it (or its :func:`symmetrize`) where it is reused."""
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
+        F.col("u") != F.col("v")
+    )
+    return e.select(
+        F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
+    ).distinct()
+
+
 def symmetrize(
     df: DataFrame, a: str, b: str, extra: Sequence[str] = ()
 ) -> DataFrame:

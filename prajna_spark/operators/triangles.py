@@ -23,7 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from prajna_spark.operators.lifecycle import scoped_local_checkpoint
+from prajna_spark.operators.lifecycle import (
+    iterate_checkpointed,
+    release_local_checkpoint,
+    scoped_local_checkpoint,
+)
+from prajna_spark.operators.symmetry import symmetrize, undirected_edges
 
 
 def _oriented(edges: DataFrame, src_col: str, dst_col: str):
@@ -43,21 +48,14 @@ def _oriented(edges: DataFrame, src_col: str, dst_col: str):
     adjacency stage dominated by InterpretedOrdering.<init> /
     PhysicalStructType.forSchema), a cost that is invisible at sf0.1
     and devours the stage at scale."""
-    from prajna_spark.operators.symmetry import symmetrize
     from prajna_spark.operators.zipindex import zip_with_index
 
-    e = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).where(F.col("u") != F.col("v"))
     # checkpointed EAGERLY: consumed by deg, the orientation join, and
     # n_edges — and the first consumer used to arrive through the
     # two-branch symmetrizing union, whose map tasks raced to populate a
     # lazy persist and computed the exploding upstream join + distinct
     # twice (r11). One materialization job; every consumer reads blocks.
-    und = scoped_local_checkpoint(
-        e.select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"))
-        .distinct()
-    )
+    und = scoped_local_checkpoint(undirected_edges(edges, src_col, dst_col))
     sym = symmetrize(und, "a", "b")
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
 
@@ -213,74 +211,52 @@ def k_core(
     tier used to rank graph regions before expensive per-region work).
 
     Per round: two semi-joins restrict edges to survivors + one
-    node-keyed degree count; localCheckpoint keeps lineage O(1); the
-    removed-count rides the checkpoint job via observe() — no extra
-    count() job. Raises if ``max_rounds`` is hit before the fixpoint
-    (the SQL-ladder oracle replays a fixed depth, so silent
+    node-keyed degree count, one checkpointed generation
+    (:func:`iterate_checkpointed`); the survivor count rides each
+    checkpoint job via observe(). Raises if ``max_rounds`` is hit before
+    the fixpoint (the SQL-ladder oracle replays a fixed depth, so silent
     non-convergence must be loud)."""
-    from pyspark.sql import Observation
-
-    from prajna_spark.operators.lifecycle import (
-        release_local_checkpoint,
-        scoped_local_checkpoint,
-    )
-
-    e = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).where(F.col("u") != F.col("v"))
-    from prajna_spark.operators.symmetry import symmetrize
-
-    und = e.select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")).distinct()
     # one-pass symmetrization: the union spelling ran the caller's edge
     # derivation + distinct twice inside this checkpoint job (r11)
-    sym = symmetrize(und, "a", "b")
+    sym = symmetrize(undirected_edges(edges, src_col, dst_col), "a", "b")
     sym = sym.transform(scoped_local_checkpoint)
 
-    survivors = (
-        sym.groupBy("a")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .where(F.col("deg") >= k)
-        .select(F.col("a").alias("nid"), "deg")
-        .transform(scoped_local_checkpoint)
-    )
-    n_prev = survivors.count()  # the ONLY count() job; rounds use observe()
-    for _ in range(max_rounds):
+    def peel(e: DataFrame) -> DataFrame:
+        return (
+            e.groupBy("a")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .where(F.col("deg") >= k)
+            .select(F.col("a").alias("nid"), "deg")
+        )
+
+    def step(survivors: DataFrame, _: int) -> DataFrame:
         keep = survivors.select("nid")
         # b-side survivor filter FIRST, a-side second: the degree count
-        # below groups by a, so the last semi-join's hash partitioning
-        # on a satisfies the aggregation's clustering and the plan needs
-        # no third edge-cardinality exchange per round (r11; semi-joins
-        # are filters, so the order cannot change the result)
-        restricted = (
+        # groups by a, so the last semi-join's hash partitioning on a
+        # satisfies the aggregation's clustering and the plan needs no
+        # third edge-cardinality exchange per round (r11; semi-joins are
+        # filters, so the order cannot change the result)
+        return peel(
             sym.join(
                 keep.withColumnRenamed("nid", "__n").hint("SHUFFLE_HASH"),
                 F.col("b") == F.col("__n"),
                 "left_semi",
-            )
-            .join(
-                keep.hint("SHUFFLE_HASH"), F.col("a") == keep.nid, "left_semi"
-            )
+            ).join(keep.hint("SHUFFLE_HASH"), F.col("a") == keep.nid, "left_semi")
         )
-        obs = Observation()
-        nxt = (
-            restricted.groupBy("a")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= k)
-            .select(F.col("a").alias("nid"), "deg")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .transform(scoped_local_checkpoint)
-        )
-        n_now = obs.get["n"] or 0
-        release_local_checkpoint(survivors)
-        survivors = nxt
-        if n_now == n_prev:
-            break
-        n_prev = n_now
-    else:
+
+    survivors = scoped_local_checkpoint(peel(sym))
+    sizes = [survivors.count()]
+
+    def settled(n: int, _: int) -> bool:
+        sizes.append(n)  # survivors only shrink: a repeated size is the fixpoint
+        return n == sizes[-2]
+
+    survivors, stopped = iterate_checkpointed(
+        survivors, step, max_rounds, stop=(F.count(F.lit(1)), settled)
+    )
+    if not stopped:
         raise RuntimeError(f"k_core did not converge within {max_rounds} rounds")
-    out = survivors.select(
-        F.col("nid").alias("node_id"), F.col("deg").cast("long").alias("core_degree")
-    ).transform(scoped_local_checkpoint)
-    release_local_checkpoint(survivors)
     release_local_checkpoint(sym)
-    return out
+    return survivors.select(
+        F.col("nid").alias("node_id"), F.col("deg").cast("long").alias("core_degree")
+    )

@@ -31,7 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from prajna_spark.operators.lifecycle import scoped_local_checkpoint
+from prajna_spark.operators.lifecycle import (
+    iterate_checkpointed,
+    persist_scope,
+    scoped_local_checkpoint,
+)
 
 
 def char_tokens(word) -> F.Column:
@@ -139,23 +143,26 @@ def learn_bpe_merges(
     """Learn the first ``n_merges`` BPE merges from a (word, freq)
     table. Returns (round, left, right, pair_count) — the ordered merge
     list that defines the tokenizer."""
-    spark = words.sparkSession
-    corpus = words.select(
-        F.col(word_col).alias("word"),
-        F.col(freq_col).cast("long").alias("freq"),
-        char_tokens(F.col(word_col)).alias("toks"),
-    ).transform(scoped_local_checkpoint)
     merges = []
-    for rnd in range(1, n_merges + 1):
+
+    def step(corpus: DataFrame, rnd: int) -> DataFrame | None:
         top = _top_pair(corpus)
         if not top:
-            break
+            return None
         la, lb, c = top[0]["left"], top[0]["right"], top[0]["pair_count"]
         merges.append((rnd, la, lb, int(c)))
-        nxt = merge_pair(corpus, la, lb).transform(scoped_local_checkpoint)
-        corpus.unpersist()
-        corpus = nxt
-    return spark.createDataFrame(
+        return merge_pair(corpus, la, lb)
+
+    # the merge list is driver-side, so every corpus generation — the
+    # last one included — is released when the scope closes
+    with persist_scope():
+        corpus = words.select(
+            F.col(word_col).alias("word"),
+            F.col(freq_col).cast("long").alias("freq"),
+            char_tokens(F.col(word_col)).alias("toks"),
+        ).transform(scoped_local_checkpoint)
+        iterate_checkpointed(corpus, step, n_merges)
+    return words.sparkSession.createDataFrame(
         merges, "round long, left string, right string, pair_count long"
     )
 

@@ -17,12 +17,13 @@ north-star LLM-pipeline surface (BASELINE.json).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from prajna_spark.functions.rounding import pround
 from prajna_spark.operators.fanout import fan_out
 from prajna_spark.operators.lifecycle import (
+    iterate_checkpointed,
     release_local_checkpoint,
     scoped_local_checkpoint,
     scoped_persist,
@@ -403,14 +404,12 @@ def connected_components(
     remaining chain length each round, so convergence is O(log diameter)
     iterations instead of O(diameter) — the difference between 4 and 40
     shuffles on a path-shaped component. Per iteration: edges⋈labels +
-    groupBy min + the jump self-join; the change flag is computed INLINE
-    and harvested via ``observe()`` DURING the checkpoint job — no extra
-    count() job (or join) per round.
-    Labels are localCheckpoint'ed each round — persist alone does NOT
-    truncate the logical plan, and an iterative chain of joins otherwise
-    grows a plan Catalyst can't even print (StackOverflow at ~15 rounds);
-    checkpointing keeps plan AND lineage O(1). On a real cluster use a
-    reliable checkpoint dir for fault tolerance. For adversarial graphs at
+    groupBy min + the jump self-join, one checkpointed generation
+    (:func:`~prajna_spark.operators.lifecycle.iterate_checkpointed`); the
+    change flag is computed INLINE and its sum rides the checkpoint job
+    via ``observe()`` — no extra count() job (or join) per round. On a
+    real cluster use a reliable checkpoint dir for fault tolerance. For
+    adversarial graphs at
     extreme scale the large-star/small-star alternation (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14) is the same
     building blocks with the same O(log) round bound.
@@ -439,7 +438,7 @@ def connected_components(
     # builds (one per iteration, inside each checkpoint job) exhausted the
     # shared heap on a dense 16M-edge graph. Shuffle-hash keeps per-round
     # memory bounded by a partition, not a table.
-    for _ in range(max_iter):
+    def step(labels: DataFrame, _: int) -> DataFrame:
         neigh_min = (
             e.join(labels.hint("SHUFFLE_HASH"), e.src == labels.nid)
             .groupBy("dst")
@@ -458,44 +457,29 @@ def connected_components(
         jump = one_hop.select(
             F.col("nid").alias("jnid"), F.col("label").alias("jlabel")
         )
-        obs = Observation()
-        new_labels = (
-            one_hop.join(jump.hint("SHUFFLE_HASH"), one_hop.label == jump.jnid, "left")
-            .select(
-                "nid",
-                F.least(
-                    F.col("label"), F.coalesce("jlabel", F.col("label"))
-                ).alias("label"),
-                (
-                    F.least(F.col("label"), F.coalesce("jlabel", F.col("label")))
-                    < F.col("old")
-                ).alias("__chg"),
-            )
-            .observe(obs, F.sum(F.col("__chg").cast("long")).alias("chg"))
-            .transform(scoped_local_checkpoint)
+        return one_hop.join(
+            jump.hint("SHUFFLE_HASH"), one_hop.label == jump.jnid, "left"
+        ).select(
+            "nid",
+            F.least(
+                F.col("label"), F.coalesce("jlabel", F.col("label"))
+            ).alias("label"),
+            (
+                F.least(F.col("label"), F.coalesce("jlabel", F.col("label")))
+                < F.col("old")
+            ).alias("__chg"),
         )
-        changed = obs.get["chg"] or 0
-        # Release the superseded checkpoint NOW: each localCheckpoint pins
-        # its RDD in storage memory, and in local mode driver+executors
-        # share one heap — 20 pinned generations starved AQE's broadcast
-        # builds at 10x data (observed: "Not enough memory to build and
-        # broadcast" inside the loop). Bounded to 2 live generations.
-        # Dataset.unpersist() is a no-op on checkpointed frames — the
-        # release must go through the LogicalRDD leaf (see lifecycle).
-        prev = labels
-        labels = new_labels.select("nid", "label")
-        release_local_checkpoint(prev)
-        if changed == 0:
-            break
 
-    out = labels.select(
-        F.col("nid").alias(id_col), F.col("label").alias("component_id")
-    ).transform(scoped_local_checkpoint)
-    # the returned frame is its own checkpoint; the loop's last label
-    # generation and the doubled edge list are no longer reachable
-    release_local_checkpoint(labels)
+    labels, _ = iterate_checkpointed(
+        labels,
+        step,
+        max_iter,
+        stop=(F.sum(F.col("__chg").cast("long")), lambda chg, _: not chg),
+    )
     release_local_checkpoint(e)
-    return out
+    return labels.select(
+        F.col("nid").alias(id_col), F.col("label").alias("component_id")
+    )
 
 
 def verify_pairs_jaccard(

@@ -412,8 +412,9 @@ def labelprop_part_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachability, k-core = density rank, label propagation = community
     structure). Per round one edge-cardinality neighbor join
     (SHUFFLE_HASH pinned), one (node, label) count, one per-node argmax
-    window; O(1) lineage via localCheckpoint. Integer-only arithmetic,
-    so the fixed-depth SQL ladder replays the schedule exactly."""
+    hash aggregate; O(1) lineage via localCheckpoint. Integer-only
+    arithmetic, so the fixed-depth SQL ladder replays the schedule
+    exactly."""
     tune(spark)
     scale_shuffle_partitions(spark, sf_dir)
     from prajna_spark.operators.labelprop import label_propagation

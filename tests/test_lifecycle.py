@@ -93,34 +93,159 @@ def test_release_local_checkpoint_actually_frees_blocks(spark):
 
 
 def test_iterative_operators_leave_bounded_checkpoints(spark):
-    """connected_components and pagerank release superseded generations
-    and loop-invariant inputs: after a call, at most ONE new pinned RDD
-    (the returned frame's own checkpoint) remains."""
+    """Every checkpointed loop operator releases its superseded
+    generations and loop-invariant inputs: after a call, at most ONE new
+    pinned RDD (the returned frame's own checkpoint) remains. BPE's
+    result is driver-side, so it must not even keep that one pinned for
+    long — it used to leave one per round (``unpersist`` is a no-op on a
+    checkpoint)."""
+    from prajna_spark.operators.bfs import bounded_sssp, multi_source_bfs
+    from prajna_spark.operators.labelprop import label_propagation
     from prajna_spark.operators.lifecycle import release_local_checkpoint
     from prajna_spark.operators.pagerank import pagerank
+    from prajna_spark.operators.triangles import k_core
+    from prajna_spark.pipeline.bpe import learn_bpe_merges
     from prajna_spark.pipeline.dedup import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6)], "id_a long, id_b long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, 7)], "id long")
-
-    base = _cached_ids(spark)
-    cc = connected_components(edges, nodes)
-    assert cc.count() == 6
-    cc_new = _cached_ids(spark) - base
-    assert len(cc_new) <= 1, f"CC left {len(cc_new)} pinned RDDs"
-    release_local_checkpoint(cc, blocking=True)
-
     pr_edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (4, 1)], "src long, dst long"
     )
+    # K4 plus a pendant: a 3-core that takes one peeling round
+    kc_edges = spark.createDataFrame(
+        [(a, b) for a in range(4) for b in range(a + 1, 4)] + [(3, 4)],
+        "src long, dst long",
+    )
+    w_edges = pr_edges.withColumn("w", F.lit(1.5))
+    seeds = spark.createDataFrame([(1,)], "nid long")
+    words = spark.createDataFrame(
+        [("lower", 5), ("lowest", 2), ("newer", 6), ("banana", 4)],
+        "word string, freq long",
+    )
+    cases = {
+        "connected_components": (lambda: connected_components(edges, nodes), 6),
+        "pagerank": (lambda: pagerank(pr_edges, n_iter=6), 4),
+        "multi_source_bfs": (lambda: multi_source_bfs(pr_edges, seeds, 5), 3),
+        "bounded_sssp": (lambda: bounded_sssp(w_edges, seeds, 4), 3),
+        "k_core": (lambda: k_core(kc_edges, 3), 4),
+        "label_propagation": (lambda: label_propagation(pr_edges, n_iter=5), 4),
+        "learn_bpe_merges": (
+            lambda: learn_bpe_merges(words, "word", "freq", n_merges=6),
+            6,
+        ),
+    }
+    for name, (run, n_rows) in cases.items():
+        base = _cached_ids(spark)
+        out = run()
+        assert out.count() == n_rows, name
+        new = _cached_ids(spark) - base
+        assert len(new) <= 1, f"{name} left {len(new)} pinned RDDs"
+        release_local_checkpoint(out, blocking=True)
+
+
+def test_iterate_checkpointed_contract(spark):
+    """The one checkpointed loop: at most two generations are pinned
+    mid-loop, ``stop`` ends it early with no Spark job beyond the
+    rounds' own checkpoints, and running out of rounds is reported."""
+    from prajna_spark.operators.lifecycle import (
+        iterate_checkpointed,
+        release_local_checkpoint,
+        scoped_local_checkpoint,
+    )
+
+    sc = spark.sparkContext
+    rounds: list[int] = []
+    live: list[int] = []
+
+    def step(state, i):
+        rounds.append(i)
+        live.append(len(_cached_ids(spark) - base))
+        return state.select((F.col("x") + 1).alias("x"))
+
+    def jobs_of(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            start = scoped_local_checkpoint(spark.range(0, 8, 1, 2).toDF("x"))
+            out, stopped = iterate_checkpointed(start, step, **kw)
+            return out, stopped, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
     base = _cached_ids(spark)
-    pr = pagerank(pr_edges, n_iter=6)
-    assert pr.count() == 4
-    pr_new = _cached_ids(spark) - base
-    assert len(pr_new) <= 1, f"pagerank left {len(pr_new)} pinned RDDs"
-    release_local_checkpoint(pr, blocking=True)
+    out, stopped, _ = jobs_of("iterate_exhaust", max_rounds=6)
+    assert not stopped
+    assert rounds == [1, 2, 3, 4, 5, 6]
+    assert sorted(r.x for r in out.collect()) == list(range(6, 14))
+    assert 1 <= max(live) <= 2, live  # superseded generations released
+    assert len(_cached_ids(spark) - base) == 1  # only the final one stays
+    release_local_checkpoint(out, blocking=True)
+
+    out, _, fixed_jobs = jobs_of("iterate_fixed", max_rounds=3)
+    release_local_checkpoint(out, blocking=True)
+    rounds.clear()
+    out, stopped, stop_jobs = jobs_of(
+        "iterate_stop",
+        max_rounds=10,
+        stop=(F.max("x"), lambda top, i: top >= 10),
+    )
+    assert stopped and rounds == [1, 2, 3]
+    assert sorted(r.x for r in out.collect()) == list(range(3, 11))
+    # the stop metric rides the checkpoint jobs: no extra job per round
+    assert stop_jobs == fixed_jobs, (stop_jobs, fixed_jobs)
+    release_local_checkpoint(out, blocking=True)
+
+
+def test_persist_scopes_are_per_thread(spark):
+    """Thread A persists inside its own scope while thread B opens and
+    closes another: B's exit must not release A's frame (module-global
+    scope stacks registered A's persist into B's scope, then B's exit
+    freed it), and A's exit still does."""
+    import threading
+
+    a_in, b_in, a_persisted, b_out = (threading.Event() for _ in range(4))
+    seen: dict[str, set[int]] = {}
+    errors: list[BaseException] = []
+
+    def thread_a():
+        try:
+            with persist_scope():
+                a_in.set()
+                assert b_in.wait(60)
+                before = _cached_ids(spark)
+                df = scoped_persist(spark.range(30).toDF("a"))
+                df.count()
+                seen["a"] = _cached_ids(spark) - before
+                a_persisted.set()
+                assert b_out.wait(60)
+                seen["after_b"] = _cached_ids(spark)
+        except Exception as exc:  # reported by the main thread below
+            errors.append(exc)
+            a_persisted.set()
+
+    def thread_b():
+        try:
+            assert a_in.wait(60)
+            with persist_scope():
+                b_in.set()
+                assert a_persisted.wait(60)
+        except Exception as exc:  # reported by the main thread below
+            errors.append(exc)
+        finally:
+            b_out.set()
+
+    threads = [threading.Thread(target=t) for t in (thread_a, thread_b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+        assert not t.is_alive(), "scope threads did not finish"
+    assert not errors, errors
+    assert seen["a"], "thread A's persist should be cached"
+    assert seen["a"] <= seen["after_b"], "B's scope exit released A's frame"
+    assert not (_cached_ids(spark) & seen["a"])  # A's own exit released it
 
 
 def test_scope_exit_tolerates_concurrent_removal(spark, caplog):

@@ -7,6 +7,7 @@ parquet scan, small dims broadcast, no data-sized single-partition funnel.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from prajna_spark import plans
@@ -14,6 +15,17 @@ from prajna_spark.queries import queries
 from prajna_spark.sources import load_table
 
 CATALOG = queries()
+
+
+@pytest.fixture(scope="module")
+def catalog_plans(spark, sf_dir) -> dict[str, str]:
+    """Every catalog query's executed physical plan, built ONCE for all
+    the catalog-wide lints below — a build runs the query's eager
+    collects and checkpoints, so each extra sweep costs minutes."""
+    return {
+        name: fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        for name, fn in queries().items()
+    }
 
 
 def test_pricing_summary_pushdown_and_pruning(spark, sf_dir):
@@ -96,7 +108,7 @@ def test_q5_broadcasts_dims(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_no_accidental_cartesian_anywhere_in_catalog(spark, sf_dir):
+def test_no_accidental_cartesian_anywhere_in_catalog(catalog_plans):
     """Catalog-wide plan lint: no CartesianProduct / BroadcastNestedLoopJoin
     in ANY query except the ones whose operator IS a cross join (or a
     broadcast cross join by design: brute-force kNN, IVF assignment,
@@ -113,14 +125,13 @@ def test_no_accidental_cartesian_anywhere_in_catalog(spark, sf_dir):
         # same bounded shape as knn_bruteforce
         "pq_adc_knn_recall",
     }
-    for name, fn in queries().items():
+    for name, plan in catalog_plans.items():
         if name in allowed:
             continue
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, f"{name} has a cartesian product"
 
 
-def test_no_python_eval_anywhere_in_catalog(spark, sf_dir):
+def test_no_python_eval_anywhere_in_catalog(catalog_plans):
     """Catalog-wide JVM-discipline lint (extends the headline-only check):
     NO query may drop to row-at-a-time or Arrow Python evaluation except
     the ones whose operator IS a pandas UDF by design — the Arrow-batched
@@ -161,10 +172,9 @@ def test_no_python_eval_anywhere_in_catalog(spark, sf_dir):
         # the JVM twin is mapreduce_priority_histogram
         "map_by_collection_stats",
     }
-    for name, fn in queries().items():
+    for name, plan in catalog_plans.items():
         if name in allowed:
             continue
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         for node in (
             "BatchEvalPython",
             "ArrowEvalPython",

@@ -136,7 +136,7 @@ def test_labelprop_shuffle_linear_in_edges(spark):
     ratio = d_big["shuffle_write_records"] / max(1, d_small["shuffle_write_records"])
     assert 1.2 <= ratio <= 3.5, (ratio, d_small, d_big)
     # per iteration: symmetrized-edge label join + (node, lbl) counts +
-    # the window's rank exchange — all O(|E|) rows (sym = 2|E|)
+    # the per-node min_by argmax — all O(|E|) rows (sym = 2|E|)
     assert d_big["shuffle_write_records"] <= 16 * n_iter * 6000, d_big
     assert (
         d_big["shuffle_write_bytes"] / max(1, d_big["shuffle_write_records"]) < 200
