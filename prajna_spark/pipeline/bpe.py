@@ -151,7 +151,8 @@ def learn_bpe_merges(
             return None
         la, lb, c = top[0]["left"], top[0]["right"], top[0]["pair_count"]
         merges.append((rnd, la, lb, int(c)))
-        return merge_pair(corpus, la, lb)
+        # the merge list is complete: the last merged corpus is never read
+        return merge_pair(corpus, la, lb) if rnd < n_merges else None
 
     # the merge list is driver-side, so every corpus generation — the
     # last one included — is released when the scope closes

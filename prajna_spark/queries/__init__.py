@@ -49,6 +49,28 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
+def work_dir(prefix: str, sf_dir: str) -> str:
+    """Deterministic scratch dir for one query, scale and calling thread,
+    WIPED on entry. Catalog queries that build a store, index or stream
+    checkpoint on disk use it instead of ``mkdtemp``: repeated runs
+    (driver gate, scale smoke, bench) would otherwise leave one full copy
+    per invocation behind — unbounded disk growth. A fixed path +
+    rm-then-recreate bounds usage at one live copy per query, scale and
+    thread; the thread is part of the key so concurrent callers never
+    share (or wipe) a directory. The caller's read plan is built after
+    the rebuild, so nothing dangles."""
+    import hashlib
+    import shutil
+    import tempfile
+    import threading
+
+    key = f"{sf_dir}|{threading.get_ident()}"
+    tag = hashlib.md5(key.encode()).hexdigest()[:8]
+    path = f"{tempfile.gettempdir()}/prajna_{prefix}_{tag}"
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
 def _load_all() -> None:
     # Import side-effect registers every module's queries exactly once.
     # Import order is NOT load-bearing: registry() reorders by recorded

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from prajna_spark.queries import query
+from prajna_spark.queries import query, work_dir
 from prajna_spark.session import tune
 from prajna_spark.sources import load_table
 
@@ -956,15 +956,12 @@ def attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 def heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters through the STREAMED Misra-Gries store
     (streaming.heavyhitters_stream): readStream over events -> per-micro-
-    batch MG summaries appended to a delta store -> merged upper-bound
-    candidates -> exact confirmation against the batch table. Retried
-    appends only inflate upper bounds (candidates stay a superset), and
-    the exact pass removes every false positive — at-least-once appends
-    with no batch-id bookkeeping still reproduce the batch answer, which
-    is why this shares heavy_hitters_users' plain HAVING oracle
-    verbatim."""
-    import tempfile
-
+    batch MG summaries written to a delta store -> merged upper-bound
+    candidates -> exact confirmation against the batch table. Upper
+    bounds keep candidates a superset of the heavy hitters and the exact
+    pass removes every false positive, so the streamed path reproduces
+    the batch answer — which is why this shares heavy_hitters_users'
+    plain HAVING oracle verbatim."""
     from prajna_spark.streaming.heavyhitters_stream import (
         heavy_hitters_from_store,
         start_incremental_mg,
@@ -972,7 +969,7 @@ def heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prajna_spark.streaming.telemetry import events_readstream
 
     tune(spark)
-    base = tempfile.mkdtemp(prefix="mg_stream_q_")
+    base = work_dir("mg_stream_q", sf_dir)
     ev = events_readstream(spark, sf_dir).select("user_id")
     q = start_incremental_mg(
         ev, "user_id", m=266, store_path=f"{base}/store",
@@ -1689,8 +1686,6 @@ def hist_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the read side sums bins and interpolates. Shares the batch
     twin's oracle VERBATIM, so live == one-shot batch at any clean
     drain point, hash-for-hash."""
-    import tempfile
-
     from prajna_spark.streaming.hist_stream import (
         quantiles_from_store,
         start_incremental_histogram,
@@ -1698,7 +1693,7 @@ def hist_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prajna_spark.streaming.telemetry import events_readstream
 
     tune(spark)
-    base = tempfile.mkdtemp(prefix="hist_stream_q_")
+    base = work_dir("hist_stream_q", sf_dir)
     ev = events_readstream(spark, sf_dir).select("event_type", "value")
     q = start_incremental_histogram(
         ev, ["event_type"], "value", 0.0, 1000.0, 100,

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from prajna_spark.functions.rounding import R, pround
 from prajna_spark.operators.fanout import fan_out
-from prajna_spark.queries import query
+from prajna_spark.queries import query, work_dir
 from prajna_spark.session import tune
 from prajna_spark.sources import load_table
 
@@ -1388,12 +1388,10 @@ def cdc_apply_orders_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     version-ordered, the result is INDEPENDENT of batch arrival order
     and of redelivery, which is exactly the contract the oracle's closed
     form encodes. Per batch only touched partitions rewrite."""
-    import tempfile
-
     from prajna_spark.streaming.upsert_stream import start_cdc_apply
 
     od, na = _t(spark, sf_dir, "orders", "nation")
-    base = tempfile.mkdtemp(prefix="cdc_apply_q_")
+    base = work_dir("cdc_apply_q", sf_dir)
     snap_path, src, ckpt = f"{base}/snap", f"{base}/updates", f"{base}/ckpt"
 
     snap = od.withColumn(
@@ -1933,8 +1931,6 @@ def join_view_orders_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     view converges to the batch join without ever re-running it. Each
     batch's work is delta-sized joins plus touched-partition rewrites,
     never O(view)."""
-    import tempfile
-
     from prajna_spark.streaming.join_view import (
         JoinViewSpec,
         drain_a,
@@ -1943,7 +1939,7 @@ def join_view_orders_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders, customer = _t(spark, sf_dir, "orders", "customer")
-    base = tempfile.mkdtemp(prefix="join_view_q_")
+    base = work_dir("join_view_q", sf_dir)
     spec = JoinViewSpec(
         base,
         join_col="custkey",

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from prajna_spark.functions.rounding import R
 from prajna_spark.pipeline import retrieval, similarity
-from prajna_spark.queries import query
+from prajna_spark.queries import query, work_dir
 from prajna_spark.queries.vectors import DIM, _DOT
 from prajna_spark.session import tune
 from prajna_spark.sources import load_table, stream_table
@@ -90,24 +90,6 @@ def _bm25_scored_cte(qt_cte: str) -> str:
       GROUP BY q.query_id, p.doc_id
     )
 """
-
-
-
-def _work_dir(prefix: str, sf_dir: str) -> str:
-    """Deterministic per-(query, sf_dir) scratch dir, WIPED on entry: the
-    repeated catalog runs (driver gate, scale smoke, bench) would
-    otherwise accumulate a full index copy per invocation via mkdtemp —
-    unbounded disk growth. A fixed path + rm-then-recreate bounds usage
-    at one live copy per query/scale; the caller's read plan is built
-    after the rebuild, so nothing dangles."""
-    import hashlib
-    import shutil
-    import tempfile
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"{tempfile.gettempdir()}/prajna_{prefix}_{tag}"
-    shutil.rmtree(path, ignore_errors=True)
-    return path
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -256,7 +238,7 @@ def bm25_persisted_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     on-disk layout must return exactly the from-scratch result."""
     docs = _docs(spark, sf_dir)
     qt = spark.createDataFrame(_BM25_QUERIES, "query_id string, term string")
-    path = _work_dir("text_index_q", sf_dir) + "/index"
+    path = work_dir("text_index_q", sf_dir) + "/index"
     retrieval.build_text_index(docs, path)
     return retrieval.search_text_index(spark, path, qt, k=10).select(
         "query_id", "doc_id", "score", "rk"
@@ -283,7 +265,7 @@ def bm25_stream_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tune(spark)
-    base = _work_dir("text_index_stream_q", sf_dir)
+    base = work_dir("text_index_stream_q", sf_dir)
     docs = stream_table(
         spark,
         "documents",

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from prajna_spark.functions.rounding import R, pround
 from prajna_spark.pipeline import dedup, textqa
 from prajna_spark.operators.fanout import fan_out
-from prajna_spark.queries import query
+from prajna_spark.queries import query, work_dir
 from prajna_spark.session import scale_shuffle_partitions, tune
 from prajna_spark.sources import load_table, stream_table
 
@@ -442,12 +442,10 @@ def dedup_stream_firstseen(spark: SparkSession, sf_dir: str) -> DataFrame:
     global first-seen set — exactly-once output from at-least-once input.
     Only (fingerprint, id) rows ever shuffle; documents ride within their
     batch."""
-    import tempfile
-
     from prajna_spark.streaming.dedup_stream import start_incremental_dedup
 
     tune(spark)
-    base = tempfile.mkdtemp(prefix="dedup_stream_q_")
+    base = work_dir("dedup_stream_q", sf_dir)
     docs = stream_table(
         spark,
         "documents",
@@ -1534,15 +1532,13 @@ def lsh_stream_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands-of-queries so the index scan prunes to the probes' buckets —
     O(probe bands) cells read at any index size. Same signature
     arithmetic as the batch LSH tier, which is what the oracle replays."""
-    import tempfile
-
     from prajna_spark.streaming.lsh_stream import (
         search_lsh_index,
         start_incremental_lsh,
     )
 
     tune(spark)
-    base = tempfile.mkdtemp(prefix="lsh_stream_q_")
+    base = work_dir("lsh_stream_q", sf_dir)
     docs = stream_table(
         spark,
         "documents",

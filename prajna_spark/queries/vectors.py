@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from prajna_spark.functions.rounding import R, pround
 from prajna_spark.operators.fanout import fan_out
 from prajna_spark.pipeline import similarity
-from prajna_spark.queries import query
+from prajna_spark.queries import query, work_dir
 from prajna_spark.session import scale_shuffle_partitions, tune
 from prajna_spark.sources import load_table
 
@@ -276,8 +276,6 @@ def search_ivf_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nprobe cells (dynamic partition pruning; plan-asserted in
     tests/test_ivf_index.py). Same parameters as ann_ivf_topk, same
     oracle: the on-disk layout must return exactly the in-memory result."""
-    import tempfile
-
     from prajna_spark.pipeline.similarity import build_ivf_index, search_ivf_index
 
     emb = _emb(spark, sf_dir)
@@ -285,7 +283,7 @@ def search_ivf_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (see ann_ivf_topk; same rows)
     raw = _emb_raw(spark, sf_dir)
     cent = raw.where(F.col("vec_id") < 16)
-    path = tempfile.mkdtemp(prefix="ivf_index_q_") + "/index"
+    path = work_dir("ivf_index_q", sf_dir) + "/index"
     build_ivf_index(emb, cent, path)
     return search_ivf_index(
         spark,

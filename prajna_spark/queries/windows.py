@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from prajna_spark.functions.rounding import R, pround
-from prajna_spark.queries import query
+from prajna_spark.queries import query, work_dir
 from prajna_spark.session import tune
 from prajna_spark.sources import load_table
 
@@ -102,13 +102,11 @@ def telemetry_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rollup_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming continuous aggregate, end-to-end through the PERSISTED
-    path (streaming.rollup_stream): readStream -> per-batch delta append ->
+    path (streaming.rollup_stream): readStream -> per-batch delta write ->
     compact_store -> cascade_from_store. The driver-checked guarantee is
     store-state-after-drain == batch rollup — the invariant that makes the
     delta store a valid continuous aggregate. Only aggregate rows ever
     land on disk; the store stays O(buckets) regardless of stream length."""
-    import tempfile
-
     from prajna_spark.streaming.rollup_stream import (
         cascade_from_store,
         compact_store,
@@ -117,7 +115,7 @@ def rollup_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prajna_spark.streaming.telemetry import events_readstream
 
     tune(spark)
-    base = tempfile.mkdtemp(prefix="rollup_stream_q_")
+    base = work_dir("rollup_stream_q", sf_dir)
     ev = events_readstream(spark, sf_dir).select(
         F.col("ts").cast("long").alias("t"), "event_type", "value"
     )
@@ -574,30 +572,21 @@ def asof_join_bucketed_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("session-window", "streaming", "upgrade"),
 )
 def session_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user session windows (30-minute inactivity gap) via Spark's
-    native ``F.session_window`` — the dynamic-gap upgrade the reference's
-    fixed-snapshot telemetry cannot express (SURVEY §2.12). ts truncated
-    to whole seconds on BOTH engines so gap boundaries agree. Batch twin
-    of the stateful streaming sessionizer (streaming/sessions.py)."""
+    """Per-user sessions (30-minute inactivity gap) — the dynamic-gap
+    upgrade the reference's fixed-snapshot telemetry cannot express
+    (SURVEY §2.12). Gaps and islands (streaming.sessions.gap_sessions,
+    the batch twin of the stateful streaming sessionizer): a gap of at
+    least 30 minutes opens a new session. ``F.session_window`` is not
+    used: it merges two events exactly 30 minutes apart. ts truncated to
+    whole seconds on BOTH engines so gap boundaries agree."""
+    from prajna_spark.streaming.sessions import gap_sessions
+
     tune(spark)
     ev = load_table(spark, "events", sf_dir).select(
-        "user_id",
-        F.timestamp_seconds(F.col("ts").cast("long")).alias("ts"),
-        "value",
+        "user_id", F.col("ts").cast("long").alias("t"), "value"
     )
-    return (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            pround(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("win.start").cast("long").alias("session_start"),
-            F.col("win.end").cast("long").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
+    return gap_sessions(ev, 1800).withColumn(
+        "total_value", pround(F.col("total_value"), 2)
     )
 
 
@@ -1227,13 +1216,10 @@ def trend_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kmv_stream_distinct_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily distinct users through the STREAMED sketch store
     (streaming.kmv_stream): readStream over events -> per-micro-batch
-    hourly KMV partials appended to a delta store -> read-side merge +
+    hourly KMV partials written to a delta store -> read-side merge +
     daily cascade + estimate. Shares the batch twin's oracle VERBATIM —
-    the merge idempotence that makes retried appends harmless is the
-    same equality that makes the streamed path reproduce the one-shot
-    batch numbers hash-for-hash."""
-    import tempfile
-
+    the k-min merge is the same equality that makes the streamed path
+    reproduce the one-shot batch numbers hash-for-hash."""
     from prajna_spark.streaming.kmv_stream import (
         distinct_from_store,
         start_incremental_kmv,
@@ -1241,7 +1227,7 @@ def kmv_stream_distinct_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prajna_spark.streaming.telemetry import events_readstream
 
     tune(spark)
-    base = tempfile.mkdtemp(prefix="kmv_stream_q_")
+    base = work_dir("kmv_stream_q", sf_dir)
     ev = events_readstream(spark, sf_dir).select(
         F.col("ts").cast("long").alias("t"), "event_type", "user_id"
     )
@@ -1712,7 +1698,6 @@ def dedup_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     provider for tiny fixtures. Provider equivalence + engagement are
     asserted in tests/test_statestore.py."""
     import os
-    import tempfile
 
     from prajna_spark.streaming.dedup_stream import start_watermark_dedup
     from prajna_spark.streaming.statestore import (
@@ -1723,7 +1708,7 @@ def dedup_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from prajna_spark.streaming.telemetry import events_readstream
 
     tune(spark)
-    base = tempfile.mkdtemp(prefix="wm_dedup_q_")
+    base = work_dir("wm_dedup_q", sf_dir)
     ev = events_readstream(spark, sf_dir).select(
         "ts",
         "user_id",
@@ -1740,7 +1725,7 @@ def dedup_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{base}/store", f"{base}/ckpt",
         )
         q.awaitTermination()
-    return spark.read.parquet(f"{base}/store")
+    return spark.read.parquet(f"{base}/store").drop("ingest_batch")
 
 
 @query(
@@ -1787,10 +1772,11 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     flush as a heartbeat/punctuation event on both streams."""
     import glob
     import os
-    import tempfile
+
+    from prajna_spark.streaming.sink import drain
 
     tune(spark)
-    base = tempfile.mkdtemp(prefix="ss_louter_")
+    base = work_dir("ss_louter", sf_dir)
     src = os.path.join(base, "src")
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
@@ -1814,7 +1800,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.unix_timestamp("ts")).alias("m")
     ).collect()[0]["m"]
 
-    def drain(max_files: int | None = None) -> None:
+    def drain_join(max_files: int | None = None) -> None:
         reader = spark.readStream.schema(
             "event_id long, ts timestamp, user_id long, event_type string"
         )
@@ -1844,18 +1830,11 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
             & (F.col("v_ts") <= F.col("p_ts"))
         )
-        q = (
-            p.join(v, cond, "left_outer")
-            .select("p_id", "v_id")
-            .writeStream.foreachBatch(
-                lambda b, _i: b.write.mode("append").parquet(out)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(
+            p.join(v, cond, "left_outer").select("p_id", "v_id"),
+            lambda b, _i: b.write.mode("append").parquet(out),
+            ckpt,
+        ).awaitTermination()
 
     # Stage both sentinels INTO src before the (single) drain — built
     # driver-side with pyarrow (2 rows each; a Spark job per sentinel
@@ -1924,7 +1903,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = parquet_row_estimate(os.path.join(sf_dir, "events.parquet"))
     try:
         with auto_state_provider(spark, est):
-            drain(max_files=n_data)  # ONE streaming startup, 3 ordered batches
+            drain_join(max_files=n_data)  # ONE streaming startup, 3 ordered batches
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(out).where(F.col("p_id") >= 0)
@@ -1954,19 +1933,17 @@ def anomaly_stream_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous model-scoring alerts (streaming.anomaly_stream): the
     seasonal hour-of-day forecast (the table behind
     seasonal_forecast_mae) broadcasts into every micro-batch; events
-    deviating by more than 100 append to the alert store — the
+    deviating by more than 100 land in the alert store — the
     reference's telemetry analytic loop (paper §5.2) upgraded to a
     standing scoring stream. Stateless scoring makes the clean drain
     equal the batch filter row-for-row, which is exactly what the
     oracle checks; unseen (type, hour) keys pass silently by the
     documented inner-join contract."""
-    import tempfile
-
     from prajna_spark.streaming.anomaly_stream import start_forecast_alerts
     from prajna_spark.streaming.telemetry import events_readstream
 
     tune(spark)
-    base = tempfile.mkdtemp(prefix="anomaly_q_")
+    base = work_dir("anomaly_q", sf_dir)
     ev_batch = load_table(spark, "events", sf_dir)
     split = F.lit("2024-01-22").cast("timestamp")
     forecast = (

@@ -16,11 +16,12 @@ the index from the same vectors in one batch — appends commute because
 assignment is row-local and search reads whole cells.
 
 Idempotency under at-least-once foreachBatch: each micro-batch writes its
-rows under its own ``ingest_batch=<batch_id>`` leaf partitions using
-dynamic partition overwrite, so a REPLAYED batch (retry after a committed
-write whose checkpoint offset was lost) overwrites exactly its own leaves
-instead of appending duplicates. The equivalence above therefore holds
-for any at-least-once delivery, not just a single clean drain.
+rows through ``streaming.sink.write_batch`` under its own
+``ingest_batch=<batch_id>`` leaf partitions, so a REPLAYED batch (retry
+after a committed write whose commit entry was lost) overwrites exactly
+its own leaves instead of appending duplicates. The equivalence above
+therefore holds for any at-least-once delivery, not just a single clean
+drain.
 
 No reference equivalent: Prajna has neither vector search nor streaming
 state (SURVEY §2.12); this is the north-star continuous-curation slot for
@@ -30,10 +31,10 @@ the embedding modality.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from prajna_spark.pipeline.similarity import ivf_assign_with_vectors
+from prajna_spark.streaming.sink import drain, write_batch
 
 
 def append_ivf_batch(
@@ -46,17 +47,15 @@ def append_ivf_batch(
 ) -> None:
     """Assign one micro-batch to its nearest centroids (broadcast argmax,
     map-side) and write it under ``centroid_id=*/ingest_batch=<batch_id>/``
-    with dynamic partition overwrite. Calling this twice with the same
+    (:func:`streaming.sink.write_batch`). Calling this twice with the same
     ``batch_id`` and rows is a no-op-equivalent overwrite — the replay
     safety the streaming sink relies on (tested in test_ivf_index.py)."""
     # map-only projection (batch ⋈ assignment self-join removed, r11)
-    (
-        ivf_assign_with_vectors(batch_df, centroids, id_col, vec_col)
-        .withColumn("ingest_batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("centroid_id", "ingest_batch")
-        .parquet(index_path)
+    write_batch(
+        ivf_assign_with_vectors(batch_df, centroids, id_col, vec_col),
+        batch_id,
+        index_path,
+        "centroid_id",
     )
 
 
@@ -67,20 +66,15 @@ def start_incremental_ivf(
     checkpoint_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously append ``stream_vectors`` to the partitioned IVF index
     at ``index_path``. Centroids are fixed for the index lifetime (re-run
     k-means + rebuild to re-center — the standard IVF maintenance split:
     cheap continuous appends, periodic offline rebuilds)."""
-
-    def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        append_ivf_batch(batch_df, batch_id, centroids, index_path, id_col, vec_col)
-
-    writer = (
-        stream_vectors.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_path)
+    return drain(
+        stream_vectors,
+        lambda df, bid: append_ivf_batch(
+            df, bid, centroids, index_path, id_col, vec_col
+        ),
+        checkpoint_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

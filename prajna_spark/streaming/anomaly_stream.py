@@ -2,14 +2,16 @@
 telemetry deployment runs continuously: a small model table (here the
 hour-of-day seasonal forecast, but the shape fits any broadcastable
 scoring table — centroids, thresholds, coefficient rows) is joined to
-every micro-batch map-side and violations append to an alert store.
+every micro-batch map-side and violations land in an alert store.
 
 Stateless by design: each event scores against the PRE-TRAINED model, so
 a clean drain equals the batch filter row-for-row (the catalog oracle),
-retries can only re-append rows the dedup-on-read key filters (alerts
-carry event_id), and no watermark is involved. Retraining = rebuilding
-the forecast table and restarting the sink; the pattern upgrades to
-versioned models by stamping a model_version column on the alerts.
+and no watermark is involved. Each batch's alerts are written through
+``streaming.sink.write_batch``, so a replayed batch rewrites its own
+``ingest_batch`` partition instead of alerting twice. Retraining =
+rebuilding the forecast table and restarting the sink; the pattern
+upgrades to versioned models by stamping a model_version column on the
+alerts.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from prajna_spark.functions.rounding import pround
+from prajna_spark.streaming.sink import drain, write_batch
 
 
 def start_forecast_alerts(
@@ -30,10 +33,9 @@ def start_forecast_alerts(
     threshold: float,
     store_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Score each micro-batch against the broadcast ``forecast`` table
-    and append rows whose absolute deviation exceeds ``threshold`` to
+    and write rows whose absolute deviation exceeds ``threshold`` to
     ``store_path``. Events without a forecast row (unseen key) pass
     through silently — an inner join, the documented contract (alerting
     on unseen keys is a different policy; use a left join + null check
@@ -48,12 +50,6 @@ def start_forecast_alerts(
             )
             .where(F.abs(F.col(value_col) - F.col(forecast_col)) > threshold)
         )
-        alerts.write.mode("append").parquet(store_path)
+        write_batch(alerts, batch_id, store_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream, score_batch, checkpoint_path)

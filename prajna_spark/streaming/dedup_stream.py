@@ -32,6 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from prajna_spark.pipeline.textqa import fingerprint
 from prajna_spark.sources.formats import committed_store_exists
+from prajna_spark.streaming.sink import drain, write_batch
 
 
 def start_incremental_dedup(
@@ -41,11 +42,12 @@ def start_incremental_dedup(
     store_path: str,
     output_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously emit first-seen documents (by content fingerprint)
     from ``stream_docs``; duplicates — in-batch or vs any earlier batch —
-    are dropped."""
+    are dropped. Appends, not ``streaming.sink.write_batch``: each batch
+    reads the store it writes, so a batch replayed after its store write
+    finds its own fingerprints there and emits nothing."""
 
     def dedupe_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -76,13 +78,7 @@ def start_incremental_dedup(
         finally:
             fresh.unpersist(blocking=False)
 
-    writer = (
-        stream_docs.writeStream.foreachBatch(dedupe_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream_docs, dedupe_batch, checkpoint_path)
 
 
 def start_watermark_dedup(
@@ -92,7 +88,6 @@ def start_watermark_dedup(
     store_path: str,
     checkpoint_path: str,
     watermark: str = "3650 days",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Engine-native stateful dedup: ``dropDuplicatesWithinWatermark``
     keeps the FIRST arrival per ``keys`` and drops re-arrivals while the
@@ -106,22 +101,16 @@ def start_watermark_dedup(
     ``start_incremental_dedup``'s parquet store never forgets but must be
     compacted. Use this for wide-window telemetry dedup where the horizon
     is a retention policy; use the fingerprint store for corpus curation
-    where "ever ingested" is the contract. Survivors' key rows append to
-    ``store_path`` per micro-batch."""
-
+    where "ever ingested" is the contract. Survivors' key rows land in
+    ``store_path`` per micro-batch through ``streaming.sink.write_batch``
+    (a replayed batch rewrites its own ``ingest_batch`` partition)."""
     deduped = (
         stream.withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(keys)
         .select(*keys)
     )
-
-    def append_keys(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(store_path)
-
-    writer = (
-        deduped.writeStream.foreachBatch(append_keys)
-        .option("checkpointLocation", checkpoint_path)
+    return drain(
+        deduped,
+        lambda df, bid: write_batch(df, bid, store_path),
+        checkpoint_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

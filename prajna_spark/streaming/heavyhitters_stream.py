@@ -1,10 +1,11 @@
 """Streaming heavy hitters — incremental Misra-Gries summary maintenance
 (the frequent-keys twin of ``kmv_stream``'s distinct counts).
 
-Each micro-batch appends its own MG summaries (pipeline.heavyhitters.
-mg_summaries) to a delta store; the read side merges by summing ests and
-epses across every (batch, partition) slice. The Mergeable Summaries
-bound survives the append-only layout: a key's true count in any slice is
+Each micro-batch writes its own MG summaries (pipeline.heavyhitters.
+mg_summaries) to a delta store through ``streaming.sink.write_batch``;
+the read side merges by summing ests and epses across every
+(ingest_batch, part_id) slice. The Mergeable Summaries bound survives
+the per-batch layout: a key's true count in any slice is
 <= est_slice + eps_slice (est 0 when the slice dropped it), so summing
 over slices gives true_total <= sum(est) + sum(eps) = upper — no merge
 truncation pass is needed for CORRECTNESS, only for summary size (the
@@ -12,14 +13,10 @@ store grows by <= m rows per batch partition; ``compact_mg_store`` folds
 it back down with the standard subtract-the-(m+1)-th merge whenever read
 cost matters).
 
-Replay safety comes from the sketch-then-verify structure itself: a
-retried micro-batch that double-appends its summaries only INFLATES upper
-bounds — candidates stay a superset of the true heavy hitters, and the
-exact confirmation pass (which counts the immutable source, not the
-store) removes every false positive. At-least-once appends therefore
-yield exactly the batch answer with no batch-id bookkeeping — the same
-robustness argument as the KMV store's idempotent merge, reached via
-verification instead of idempotence.
+Replay safety: a replayed micro-batch rewrites its own ``ingest_batch``
+partition, so every slice is counted exactly once and both bounds stay
+valid. The exact confirmation pass counts the immutable source, never
+the store, so the final answer equals the batch answer.
 
 Reference parity: Prajna's telemetry loop re-folds live counters on every
 analytic cycle (paper §5.2); this store is the bounded-memory version of
@@ -33,7 +30,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from prajna_spark.operators.maintenance import rewrite_store
 from prajna_spark.pipeline.heavyhitters import mg_summaries
+from prajna_spark.streaming.sink import drain, write_batch
 
 
 def start_incremental_mg(
@@ -42,54 +41,39 @@ def start_incremental_mg(
     m: int,
     store_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Append each micro-batch's per-partition MG summaries to the store
-    as ``(batch_id, part_id, key, est, eps)``. ``batch_id`` namespaces
-    ``part_id`` (partition ids repeat across batches) — the read side
-    treats every (batch_id, part_id) pair as one summary slice."""
-
-    def append_summaries(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            mg_summaries(batch_df, key_col, m)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("append")
-            .parquet(store_path)
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(append_summaries)
-        .option("checkpointLocation", checkpoint_path)
+    """Write each micro-batch's per-partition MG summaries to the store
+    as ``(part_id, key, est, eps)`` under ``ingest_batch=<batch_id>``.
+    ``ingest_batch`` namespaces ``part_id`` (partition ids repeat across
+    batches) — the read side treats every (ingest_batch, part_id) pair
+    as one summary slice."""
+    return drain(
+        stream,
+        lambda df, bid: write_batch(mg_summaries(df, key_col, m), bid, store_path),
+        checkpoint_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _slice_eps(store: DataFrame) -> DataFrame:
+    """Total eps over the store: one eps per (ingest_batch, part_id)."""
+    return (
+        store.groupBy("ingest_batch", "part_id")
+        .agg(F.first("eps").alias("eps"))
+        .agg(F.sum("eps").alias("total_eps"))
+    )
 
 
 def candidates_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Global candidate bounds from the delta store: ``(key, lower,
     upper)``. Identical reasoning to pipeline.heavyhitters.candidate_keys,
-    with the slice id being (batch_id, part_id) instead of part_id.
-
-    Bound validity: ``upper`` is a true upper bound even under this
-    module's at-least-once replay model — a retried micro-batch that
-    double-appends its summaries inflates sum(est) AND total_eps
-    together, and est <= true-count-within-slice keeps every appended
-    copy conservative upward. ``lower`` is a valid lower bound ONLY
-    under exactly-once appends: a double-appended summary inflates
-    sum(est) above the true streamed count. The heavy-hitter gate
-    consumes only ``upper``; callers needing a replay-safe lower bound
-    must dedup the store on (batch_id, part_id) first."""
+    with the slice id being (ingest_batch, part_id) instead of
+    part_id."""
     store = spark.read.parquet(store_path)
-    per_slice_eps = store.groupBy("batch_id", "part_id").agg(
-        F.first("eps").alias("eps")
-    )
-    total = per_slice_eps.agg(F.sum("eps").alias("total_eps"))
     return (
         store.where(F.col("key").isNotNull())
         .groupBy("key")
         .agg(F.sum("est").alias("lower"))
-        .crossJoin(F.broadcast(total))
+        .crossJoin(F.broadcast(_slice_eps(store)))
         .select(
             "key",
             "lower",
@@ -141,57 +125,51 @@ def heavy_hitters_from_store(
 
 
 def compact_mg_store(spark: SparkSession, store_path: str, m: int) -> int:
-    """Fold the delta store down to ONE m-counter summary (slice id
-    batch_id=-1, part_id=0): sum ests per key, subtract the (m+1)-th
+    """Fold the delta store down to ONE m-counter summary (slice
+    ingest_batch=-1, part_id=0): sum ests per key, subtract the (m+1)-th
     largest so only m counters remain, accumulate the subtraction into
     eps — the standard MG merge, applied store-wide. Bounds after
     compaction are the bounds the merged summary implies (errors add);
     read results stay a superset-of-heavy-hitters certificate, and the
-    exact confirmation pass is unaffected. Returns rows written."""
-    store = spark.read.parquet(store_path)
-    eps_total = (
-        store.groupBy("batch_id", "part_id")
-        .agg(F.first("eps").alias("eps"))
-        .agg(F.sum("eps").alias("e"))
-    )
-    summed = (
-        store.where(F.col("key").isNotNull())
-        .groupBy("key")
-        .agg(F.sum("est").alias("est"))
-    )
-    # the summed frame is summary-sized (<= m x #slices rows), so the
-    # single-task global rank is driver-bounded by construction
-    ranked = summed.withColumn(
-        "__rk",
-        F.row_number().over(Window.orderBy(F.col("est").desc(), F.col("key"))),
-    )
-    cutoff = (
-        ranked.where(F.col("__rk") == m + 1)
-        .select(F.col("est").alias("c"))
-        .unionByName(
-            ranked.sparkSession.createDataFrame([(0,)], "c long")
+    exact confirmation pass is unaffected. The swap is
+    ``operators.maintenance.rewrite_store``'s (crash-safe, aborts on a
+    concurrent append). Returns rows written."""
+
+    def fold(store: DataFrame) -> DataFrame:
+        summed = (
+            store.where(F.col("key").isNotNull())
+            .groupBy("key")
+            .agg(F.sum("est").alias("est"))
         )
-        .agg(F.max("c").alias("c"))
-    )
-    folded = (
-        ranked.crossJoin(F.broadcast(cutoff))
-        .where(F.col("__rk") <= m)
-        .select(
-            F.lit(-1).alias("batch_id"),
-            F.lit(0).alias("part_id"),
-            "key",
-            (F.col("est") - F.col("c")).alias("est"),
+        # the summed frame is summary-sized (<= m x #slices rows), so the
+        # single-task global rank is driver-bounded by construction
+        ranked = summed.withColumn(
+            "__rk",
+            F.row_number().over(Window.orderBy(F.col("est").desc(), F.col("key"))),
         )
-        .where(F.col("est") > 0)
-        .crossJoin(F.broadcast(eps_total.crossJoin(cutoff).select(
-            (F.col("e") + F.col("c")).alias("eps")
-        )))
-        .select("batch_id", "part_id", "key", "est", "eps")
-    )
-    pdf = folded.toPandas()
-    n = len(pdf)
-    spark.createDataFrame(
-        pdf, "batch_id int, part_id int, key " +
-        dict(store.dtypes)["key"] + ", est long, eps long"
-    ).coalesce(1).write.mode("overwrite").parquet(store_path)
-    return n
+        cutoff = (
+            ranked.where(F.col("__rk") == m + 1)
+            .select(F.col("est").alias("c"))
+            .unionByName(spark.createDataFrame([(0,)], "c long"))
+            .agg(F.max("c").alias("c"))
+        )
+        eps = _slice_eps(store).crossJoin(cutoff).select(
+            (F.col("total_eps") + F.col("c")).alias("eps")
+        )
+        return (
+            ranked.crossJoin(F.broadcast(cutoff))
+            .where(F.col("__rk") <= m)
+            .select("key", (F.col("est") - F.col("c")).alias("est"))
+            .where(F.col("est") > 0)
+            .crossJoin(F.broadcast(eps))
+            .select(
+                F.lit(0).alias("part_id"),
+                "key",
+                "est",
+                "eps",
+                F.lit(-1).alias("ingest_batch"),
+            )
+            .coalesce(1)
+        )
+
+    return rewrite_store(spark, store_path, fold, "ingest_batch")

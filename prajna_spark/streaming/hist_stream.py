@@ -3,12 +3,12 @@ sketch (KMV = distinct counts, Misra-Gries = heavy keys, this =
 distributions/latency percentiles).
 
 Bin counts of the fixed-bound histogram (operators.sketch_rollup.
-fixed_histogram) are ADDITIVE, so the store appends per-micro-batch bin
+fixed_histogram) are ADDITIVE, so the store keeps per-micro-batch bin
 partials and the read side sums per (dims, bin). Addition is NOT
-idempotent (unlike the KMV min-merge), so replay safety uses the same
-mechanism as the ANN index: each batch writes under its own
-``ingest_batch=<id>`` partition with dynamic partition overwrite — a
-retried batch OVERWRITES its own partition instead of double-counting.
+idempotent, so replay safety comes from ``streaming.sink.write_batch``:
+each batch writes under its own ``ingest_batch=<id>`` partition with
+dynamic partition overwrite — a retried batch OVERWRITES its own
+partition instead of double-counting.
 
 Read-side quantile estimates reuse histogram_quantiles unchanged, so the
 live store answers the exact same catalog oracle as the one-shot batch
@@ -21,10 +21,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from prajna_spark.operators.maintenance import rewrite_store
 from prajna_spark.operators.sketch_rollup import (
     fixed_histogram,
     histogram_quantiles,
 )
+from prajna_spark.streaming.sink import drain, write_batch
 
 
 def start_incremental_histogram(
@@ -36,30 +38,20 @@ def start_incremental_histogram(
     n_bins: int,
     store_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Append each micro-batch's bin partials under
-    ``ingest_batch=<batch_id>/`` (dynamic partition overwrite — replayed
-    batches rewrite their own partition, keeping the additive store
-    exactly-once)."""
-
-    def append_bins(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            fixed_histogram(batch_df, group_cols, value_col, lo, hi, n_bins)
-            .withColumn("ingest_batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(store_path)
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(append_bins)
-        .option("checkpointLocation", checkpoint_path)
+    """Write each micro-batch's bin partials under
+    ``ingest_batch=<batch_id>/`` (``streaming.sink.write_batch`` —
+    replayed batches rewrite their own partition, keeping the additive
+    store exactly-once)."""
+    return drain(
+        stream,
+        lambda df, bid: write_batch(
+            fixed_histogram(df, group_cols, value_col, lo, hi, n_bins),
+            bid,
+            store_path,
+        ),
+        checkpoint_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def merged_histogram(
@@ -67,10 +59,12 @@ def merged_histogram(
 ) -> DataFrame:
     """One bin row per (dims, bin) from the delta store — exactly what
     fixed_histogram over the union of all streamed rows produces."""
-    return (
-        spark.read.parquet(store_path)
-        .groupBy(*group_cols, "bin")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    return _sum_bins(spark.read.parquet(store_path), group_cols)
+
+
+def _sum_bins(store: DataFrame, group_cols: list[str]) -> DataFrame:
+    return store.groupBy(*group_cols, "bin").agg(
+        F.sum("cnt").cast("long").alias("cnt")
     )
 
 
@@ -98,15 +92,16 @@ def quantiles_from_store(
 def compact_histogram_store(
     spark: SparkSession, store_path: str, group_cols: list[str]
 ) -> int:
-    """Fold the per-batch partials into one ``ingest_batch=-1`` layer:
-    read, sum, overwrite-all. Because addition is associative and the
-    merged rows equal the folded rows by construction, read results are
-    unchanged. Returns rows written."""
-    merged = merged_histogram(spark, store_path, group_cols).withColumn(
-        "ingest_batch", F.lit(-1)
+    """Fold the per-batch partials into one ``ingest_batch=-1`` layer
+    through the crash-safe ``operators.maintenance.rewrite_store``.
+    Because addition is associative and the merged rows equal the folded
+    rows by construction, read results are unchanged. Returns rows
+    written."""
+    return rewrite_store(
+        spark,
+        store_path,
+        lambda store: _sum_bins(store, group_cols).withColumn(
+            "ingest_batch", F.lit(-1)
+        ),
+        "ingest_batch",
     )
-    pdf = merged.toPandas()
-    spark.createDataFrame(pdf, merged.schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(store_path)
-    return len(pdf)

@@ -21,9 +21,10 @@ moment its partner arrives (via the ΔB rule against A's store).
 
 Replay contract: foreachBatch is at-least-once; re-applying a batch
 re-derives byte-identical view rows and the upsert of an identical row
-is a no-op, so redelivery is safe without version bookkeeping (the
-sequential single-writer model of Structured Streaming — one drain at a
-time — is assumed, as in upsert_stream).
+is a no-op, so redelivery is safe without version bookkeeping — the
+reason these stores are keyed merges, not ``streaming.sink.write_batch``
+partitions (the sequential single-writer model of Structured Streaming
+— one drain at a time — is assumed, as in upsert_stream).
 
 Left-row join-key MOVES are handled: the ΔA rule replaces every key in
 the batch, so a row moving to a dangling key drops out of the view.
@@ -45,6 +46,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from prajna_spark.operators.upsert import latest_per_key, upsert_partitioned
 from prajna_spark.sources.formats import committed_store_exists
+from prajna_spark.streaming.sink import drain
 
 
 class JoinViewSpec:
@@ -187,23 +189,12 @@ def apply_b_batch(batch_df: DataFrame, batch_id: int, spec: JoinViewSpec) -> Non
     _fold_side(spark, spec.b_path, delta, spec.b_pk, spec.b_part)
 
 
-def _drain(
-    stream: DataFrame, fn, spec: JoinViewSpec, checkpoint: str
-) -> StreamingQuery:
-    return (
-        stream.writeStream.foreachBatch(lambda df, bid: fn(df, bid, spec))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def drain_a(stream: DataFrame, spec: JoinViewSpec, checkpoint: str) -> StreamingQuery:
-    return _drain(stream, apply_a_batch, spec, checkpoint)
+    return drain(stream, lambda df, bid: apply_a_batch(df, bid, spec), checkpoint)
 
 
 def drain_b(stream: DataFrame, spec: JoinViewSpec, checkpoint: str) -> StreamingQuery:
-    return _drain(stream, apply_b_batch, spec, checkpoint)
+    return drain(stream, lambda df, bid: apply_b_batch(df, bid, spec), checkpoint)
 
 
 def read_view(spark: SparkSession, spec: JoinViewSpec) -> DataFrame:

@@ -1,24 +1,21 @@
 """Streaming COUNT DISTINCT continuous aggregate — incremental KMV
 sketch maintenance (the distinct-count twin of ``rollup_stream``).
 
-Counts/sums compose by addition, so ``rollup_stream`` appends delta rows
-and sums on read. Distinct counts don't add — but KMV sketches
-(operators.sketch_rollup) merge by k-min-of-union, and that merge is
-IDEMPOTENT: the k smallest hashes of a multiset are the k smallest of
-its set, so a retried micro-batch that double-appends its sketch rows
-changes NOTHING on read. The append-only store therefore gives
-exactly-once SEMANTICS from at-least-once appends with no batch-id
-bookkeeping at all — strictly stronger than the additive path, which
-must dedup (batch_id, bucket) on retry.
+Counts/sums compose by addition, so ``rollup_stream`` keeps per-batch
+delta rows and sums on read. Distinct counts don't add — but KMV
+sketches (operators.sketch_rollup) merge by k-min-of-union, and that
+merge is IDEMPOTENT: the k smallest hashes of a multiset are the k
+smallest of its set, so even duplicated sketch rows change NOTHING on
+read. The store is still written like every other streamed store,
+through ``streaming.sink.write_batch``, so a replayed batch rewrites its
+own partition and the store never grows on retries.
 
-Store layout: one parquet append per micro-batch of
-``(epoch_start, dims..., sketch array<long>, batch_id)`` finest-bucket
-rows (batch_id kept for observability only). Read side merges per
-bucket (explode -> k smallest, bounded by k x #batches per bucket),
-cascades to coarser resolutions, estimates. ``compact_kmv_store`` folds
-the per-batch rows into one sketch per bucket so read cost stays
-O(buckets); because merge is idempotent AND associative, compaction
-commutes with concurrent appends' read results.
+Store layout: one ``ingest_batch=<id>`` partition per micro-batch of
+``(epoch_start, dims..., sketch array<long>)`` finest-bucket rows. Read
+side merges per bucket (explode -> k smallest, bounded by k x #batches
+per bucket), cascades to coarser resolutions, estimates.
+``compact_kmv_store`` folds the per-batch rows into one sketch per
+bucket so read cost stays O(buckets).
 
 Every number this produces is deterministic md5 arithmetic — the
 catalog query shares the batch twin's DuckDB oracle verbatim.
@@ -30,12 +27,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from prajna_spark.operators.maintenance import rewrite_store
 from prajna_spark.operators.sketch_rollup import (
     _k_smallest,
     kmv_estimate,
     kmv_merge,
     kmv_partials,
 )
+from prajna_spark.streaming.sink import drain, write_batch
 
 
 def start_incremental_kmv(
@@ -48,29 +47,21 @@ def start_incremental_kmv(
     checkpoint_path: str,
     k: int = 64,
     seed: str = "kmv1",
-    available_now: bool = True,
 ) -> StreamingQuery:
-    """Append each micro-batch's finest-level KMV partials to the store
+    """Write each micro-batch's finest-level KMV partials to the store
     (``ts_col`` in epoch seconds). Within-batch aggregation only — no
-    state store, no watermark; late events just append another sketch
+    state store, no watermark; late events just add another sketch
     row for their bucket, folded in by the read-side merge (late data
     is CORRECT by construction, as in the additive rollup)."""
-
-    def append_sketches(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            kmv_partials(batch_df, ts_col, dims, key_col, finest_sec, k, seed)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(store_path)
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(append_sketches)
-        .option("checkpointLocation", checkpoint_path)
+    return drain(
+        stream,
+        lambda df, bid: write_batch(
+            kmv_partials(df, ts_col, dims, key_col, finest_sec, k, seed),
+            bid,
+            store_path,
+        ),
+        checkpoint_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def merged_finest(
@@ -80,7 +71,10 @@ def merged_finest(
     per-batch sketches (<= k longs each) and keep the k smallest
     distinct per bucket — exactly what kmv_partials over the union of
     all streamed events would have produced."""
-    store = spark.read.parquet(store_path)
+    return _merge_sketches(spark.read.parquet(store_path), dims, k)
+
+
+def _merge_sketches(store: DataFrame, dims: list[str], k: int) -> DataFrame:
     exploded = store.select(
         "epoch_start", *dims, F.explode("sketch").alias("h")
     )
@@ -118,20 +112,15 @@ def distinct_from_store(
 def compact_kmv_store(
     spark: SparkSession, store_path: str, dims: list[str], k: int
 ) -> int:
-    """Fold per-batch sketch rows into one sketch per bucket (staged to a
-    sibling dir, rename-swapped — crash-safe up to the swap instant).
-    Returns the compacted row count. batch_id retires to -1."""
-    import os
-    import shutil
-
-    compacted = merged_finest(spark, store_path, dims, k).withColumn(
-        "batch_id", F.lit(-1)
+    """Fold per-batch sketch rows into one sketch per bucket under
+    ``ingest_batch=-1`` (``operators.maintenance.rewrite_store``:
+    crash-safe, aborts on a concurrent append). Returns the compacted
+    row count."""
+    return rewrite_store(
+        spark,
+        store_path,
+        lambda store: _merge_sketches(store, dims, k).withColumn(
+            "ingest_batch", F.lit(-1)
+        ),
+        "ingest_batch",
     )
-    staging = store_path.rstrip("/") + ".compacting"
-    compacted.write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
-    old = store_path.rstrip("/") + ".old"
-    os.rename(store_path, old)
-    os.rename(staging, store_path)
-    shutil.rmtree(old)
-    return n

@@ -5,9 +5,9 @@ The dedup twin of ``streaming.ann_stream`` (vectors) and
 ``streaming.text_index_stream`` (lexical): micro-batches of documents are
 minhashed into band rows (``pipeline.dedup.lsh_band_rows`` — the SAME
 signature arithmetic as the batch LSH operators) and APPENDED under
-``bucket=<band-hash>/ingest_batch=<batch_id>/`` with dynamic partition
-overwrite, so a replayed batch overwrites exactly its own leaves
-(idempotent under at-least-once foreachBatch delivery).
+``bucket=<band-hash>/ingest_batch=<batch_id>/`` through
+``streaming.sink.write_batch``, so a replayed batch overwrites exactly its
+own leaves (idempotent under at-least-once foreachBatch delivery).
 
 Search (:func:`search_lsh_index`) answers the continuous-curation
 question "which already-ingested documents is this new document a
@@ -29,6 +29,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from prajna_spark.pipeline.dedup import lsh_band_rows
 from prajna_spark.sources.formats import committed_store_exists
+from prajna_spark.streaming.sink import drain, write_batch
 
 _ANCHOR_SCHEMA = "id long, band_id int, band_val string, bucket int"
 
@@ -56,13 +57,13 @@ def append_lsh_batch(
     rows = lsh_band_rows(
         fan_out(batch_df), id_col, text_col, n_hashes, band_size
     )
-    (
-        rows.withColumn("bucket", F.pmod(F.hash("band_id", "band_val"), F.lit(n_buckets)))
-        .withColumn("ingest_batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "ingest_batch")
-        .parquet(f"{index_path}/bands")
+    write_batch(
+        rows.withColumn(
+            "bucket", F.pmod(F.hash("band_id", "band_val"), F.lit(n_buckets))
+        ),
+        batch_id,
+        f"{index_path}/bands",
+        "bucket",
     )
 
 
@@ -75,7 +76,6 @@ def start_incremental_lsh(
     n_buckets: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously feed the band index from a document stream. A
     zero-row schema anchor under ``bands_schema/`` lets search return
@@ -93,18 +93,13 @@ def start_incremental_lsh(
             .parquet(anchor)
         )
 
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        append_lsh_batch(
-            batch_df, batch_id, index_path,
-            n_hashes, band_size, n_buckets, id_col, text_col,
-        )
-
-    writer = stream_docs.writeStream.foreachBatch(append).option(
-        "checkpointLocation", checkpoint_path
+    return drain(
+        stream_docs,
+        lambda df, bid: append_lsh_batch(
+            df, bid, index_path, n_hashes, band_size, n_buckets, id_col, text_col
+        ),
+        checkpoint_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def search_lsh_index(

@@ -7,15 +7,13 @@ a stream and derives the cascade on read:
 
 - ``start_incremental_rollup``: foreachBatch sink — each micro-batch is
   aggregated to finest-bucket PARTIAL DELTA rows (n_events, total_value
-  per bucket x dims) and appended to a parquet store tagged with the
-  micro-batch id. Only aggregate rows land on disk; the raw stream is
-  never stored. Append is idempotent-enough under retries because the
-  batch id rides along: cascade-on-read can drop duplicate
-  (batch_id, bucket, dims) rows if a sink retry double-appended (with a
-  transactional table format — Delta/Iceberg — the same foreachBatch
-  body upgrades to true exactly-once MERGE).
+  per bucket x dims) and written under its own ``ingest_batch=<id>``
+  partition (``streaming.sink.write_batch``). Only aggregate rows land
+  on disk; the raw stream is never stored. A replayed micro-batch
+  rewrites its own partition, so every batch's delta counts exactly
+  once.
 - ``cascade_from_store``: reads the delta store, merges deltas per bucket
-  (partials compose by sum — the reason deltas can be append-only), then
+  (partials compose by sum — the reason per-batch deltas suffice), then
   cascades coarser resolutions exactly like the batch operator. Results
   match the batch cascade_rollup over the union of all streamed events.
 
@@ -31,10 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from prajna_spark.operators.maintenance import rewrite_store
 from prajna_spark.operators.rollup_cascade import (
     _bucket,
     cascade_from_partials,
 )
+from prajna_spark.streaming.sink import drain, write_batch
 
 
 def start_incremental_rollup(
@@ -45,37 +45,25 @@ def start_incremental_rollup(
     finest_sec: int,
     store_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain finest-level partials from ``stream`` (``ts_col`` in epoch
-    seconds). Each micro-batch appends its per-bucket delta rows; state
+    seconds). Each micro-batch writes its per-bucket delta rows; state
     never accumulates in the streaming job itself (the aggregation is
     within-batch, so no watermark/state store is needed — late events
     simply produce another delta row for their bucket, which the
     read-side merge folds in: late data is CORRECT here by construction).
     """
 
-    def append_deltas(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy(
-                _bucket(ts_col, finest_sec).alias("epoch_start"), *dims
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(value_col).alias("total_value"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(store_path)
+    def write_deltas(batch_df: DataFrame, batch_id: int) -> None:
+        deltas = batch_df.groupBy(
+            _bucket(ts_col, finest_sec).alias("epoch_start"), *dims
+        ).agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(value_col).alias("total_value"),
         )
+        write_batch(deltas, batch_id, store_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(append_deltas)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(stream, write_deltas, checkpoint_path)
 
 
 def cascade_from_store(
@@ -87,41 +75,28 @@ def cascade_from_store(
     """Cascade-on-read over the delta store: merge per-bucket deltas, then
     derive every coarser resolution from the merged finest level. One
     scan of O(buckets x batches) aggregate rows — never the raw events."""
-    partials = spark.read.parquet(store_path).drop("batch_id")
+    partials = spark.read.parquet(store_path).drop("ingest_batch")
     return cascade_from_partials(partials, dims, resolutions, merge=True)
 
 
 def compact_store(spark: SparkSession, store_path: str, dims: list[str]) -> int:
     """Fold the store's accumulated per-batch delta rows into one row per
-    (bucket, dims) — the periodic maintenance that keeps read-side merge
-    cost O(buckets) no matter how many micro-batches have appended.
-
-    Deltas compose by sum, so compaction is a groupBy; the batch_id
-    column is retired to a sentinel (-1 marks compacted rows; later
-    deltas append alongside and the next compaction folds them in).
-    The rewrite stages to a sibling directory and swaps via rename, so a
-    crash mid-compact leaves the original store intact; swap-in is the
-    only non-atomic instant (run compaction when no cycle is active, or
-    use a transactional table format for online compaction).
-    Returns the compacted row count.
+    (bucket, dims) under ``ingest_batch=-1`` — the periodic maintenance
+    that keeps read-side merge cost O(buckets) no matter how many
+    micro-batches have landed. Deltas compose by sum, so compaction is a
+    groupBy; later batches land alongside and the next compaction folds
+    them in. The swap is ``operators.maintenance.rewrite_store``'s
+    (crash-safe, aborts on a concurrent append). Returns the compacted
+    row count.
     """
-    import os
-    import shutil
-
-    merged = (
-        spark.read.parquet(store_path)
-        .groupBy("epoch_start", *dims)
+    return rewrite_store(
+        spark,
+        store_path,
+        lambda store: store.groupBy("epoch_start", *dims)
         .agg(
             F.sum("n_events").alias("n_events"),
             F.sum("total_value").alias("total_value"),
         )
-        .withColumn("batch_id", F.lit(-1))
+        .withColumn("ingest_batch", F.lit(-1)),
+        "ingest_batch",
     )
-    staging = store_path.rstrip("/") + ".compact"
-    merged.write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
-    old = store_path.rstrip("/") + ".old"
-    os.rename(store_path, old)
-    os.rename(staging, store_path)
-    shutil.rmtree(old)
-    return n

@@ -51,6 +51,7 @@ from pyspark.sql.streaming import StreamingQuery
 from prajna_spark.operators.intervals import scd2_intervals
 from prajna_spark.operators.upsert import upsert_partitioned
 from prajna_spark.sources.formats import committed_store_exists
+from prajna_spark.streaming.sink import drain
 
 BUCKET_COL = "__scd2_bucket"
 
@@ -129,17 +130,15 @@ def start_scd2_apply(
     n_buckets: int = 16,
 ) -> StreamingQuery:
     """Drain the available change stream into the SCD2 store
-    (Trigger.AvailableNow — process everything queued, then stop; rerun
-    on a schedule for continuous operation)."""
-    return (
-        changes.writeStream.foreachBatch(
-            lambda df, bid: apply_scd2_batch(
-                df, bid, store_path, keys, state_col, ts_col, n_buckets
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    (``streaming.sink.drain``). The point store is a (key, ts)-keyed
+    merge, not a ``streaming.sink.write_batch`` store: re-applying a
+    batch is already a no-op."""
+    return drain(
+        changes,
+        lambda df, bid: apply_scd2_batch(
+            df, bid, store_path, keys, state_col, ts_col, n_buckets
+        ),
+        checkpoint,
     )
 
 

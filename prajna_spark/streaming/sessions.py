@@ -28,7 +28,8 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 SESSION_OUTPUT_SCHEMA = (
@@ -84,9 +85,9 @@ def _sessionize_fn(gap_sec: int):
             if start is None:
                 start, end, n, total = t, t, 1, v
             elif t - end >= gap_sec:
-                # >= matches the batch twin (F.session_window closes at
-                # gap >= timeout): an event exactly at end+gap starts a
-                # NEW session — [start, last + gap) semantics.
+                # >= matches the batch twin (gap_sessions): an event
+                # exactly at end+gap starts a NEW session — [start,
+                # last + gap) semantics.
                 out.append((user_id, start, end, n, total, "closed"))
                 start, end, n, total = t, t, 1, v
             else:
@@ -105,6 +106,38 @@ def _sessionize_fn(gap_sec: int):
         )
 
     return fn
+
+
+def gap_sessions(events: DataFrame, gap_sec: int = DEFAULT_GAP_SEC) -> DataFrame:
+    """Batch twin of :func:`sessionize`, same gap rule: per user, an event
+    at least ``gap_sec`` after the previous one opens a new session.
+    Gaps and islands — ``lag`` the previous event, flag gaps >=
+    ``gap_sec``, running-sum the flags into a session number.
+    ``events(user_id, t long epoch seconds, value)`` -> ``(user_id,
+    session_start, session_end = last event + gap, n_events,
+    total_value)``. (``F.session_window`` is NOT this rule: it merges two
+    events exactly ``gap_sec`` apart.)"""
+    w = Window.partitionBy("user_id").orderBy("t")
+    opens = F.coalesce(
+        (F.col("t") - F.lag("t").over(w) >= gap_sec).cast("long"), F.lit(0)
+    )
+    return (
+        events.withColumn("__new", opens)
+        .withColumn(
+            "__sess",
+            F.sum("__new").over(
+                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            ),
+        )
+        .groupBy("user_id", "__sess")
+        .agg(
+            F.min("t").alias("session_start"),
+            (F.max("t") + gap_sec).alias("session_end"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("value").alias("total_value"),
+        )
+        .drop("__sess")
+    )
 
 
 def sessionize(

@@ -3,9 +3,10 @@ a live lexical search layout.
 
 The lexical twin of ``streaming.ann_stream``: micro-batches of documents
 are tokenized into postings (doc_id, term, tf, dl) and APPENDED under
-``bucket=<term-hash>/ingest_batch=<batch_id>/`` with dynamic partition
-overwrite, so a replayed batch overwrites exactly its own leaves
-(idempotent at-least-once delivery, same contract as append_ivf_batch).
+``bucket=<term-hash>/ingest_batch=<batch_id>/`` through
+``streaming.sink.write_batch``, so a replayed batch overwrites exactly its
+own leaves (idempotent at-least-once delivery, same contract as
+append_ivf_batch).
 
 Two deliberate differences from the static ``retrieval.build_text_index``
 layout, both because corpus-GLOBAL quantities go stale under appends:
@@ -39,6 +40,7 @@ from prajna_spark.pipeline.retrieval import (
 )
 from prajna_spark.pipeline import textqa
 from prajna_spark.sources.formats import committed_store_exists
+from prajna_spark.streaming.sink import drain, write_batch
 
 
 def append_text_batch(
@@ -67,13 +69,7 @@ def append_text_batch(
     p = doc_postings(fan_out(batch_df), id_col, text_col).withColumn(
         "bucket", F.pmod(F.hash("term"), F.lit(n_buckets))
     )
-    (
-        p.withColumn("ingest_batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "ingest_batch")
-        .parquet(f"{index_path}/postings")
-    )
+    write_batch(p, batch_id, f"{index_path}/postings", "bucket")
     # n_text counts docs with non-NULL text separately from n_docs: the
     # batch path's corpus_stats uses F.avg(token_count), which skips
     # NULLs — avgdl must divide by the same denominator or live==batch
@@ -84,13 +80,7 @@ def append_text_batch(
         F.count(textqa.token_count(F.col(text_col))).cast("long").alias("n_text"),
         F.sum(textqa.token_count(F.col(text_col))).cast("long").alias("sum_dl"),
     )
-    (
-        stats.withColumn("ingest_batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(f"{index_path}/stats")
-    )
+    write_batch(stats, batch_id, f"{index_path}/stats")
 
 
 def start_incremental_text_index(
@@ -100,7 +90,6 @@ def start_incremental_text_index(
     n_buckets: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously feed the live index from a document stream.
 
@@ -124,17 +113,13 @@ def start_incremental_text_index(
             .parquet(anchor)
         )
 
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        append_text_batch(
-            batch_df, batch_id, index_path, n_buckets, id_col, text_col
-        )
-
-    writer = stream_docs.writeStream.foreachBatch(append).option(
-        "checkpointLocation", checkpoint_path
+    return drain(
+        stream_docs,
+        lambda df, bid: append_text_batch(
+            df, bid, index_path, n_buckets, id_col, text_col
+        ),
+        checkpoint_path,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def search_live_text_index(

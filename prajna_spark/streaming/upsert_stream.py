@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from prajna_spark.operators.upsert import upsert_partitioned
+from prajna_spark.streaming.sink import drain
 
 
 def apply_cdc_batch(
@@ -62,15 +63,13 @@ def start_cdc_apply(
     version_col: str,
 ) -> StreamingQuery:
     """Drain the available update stream into the snapshot
-    (Trigger.AvailableNow — process everything queued, then stop; rerun
-    on a schedule for continuous operation)."""
-    return (
-        updates.writeStream.foreachBatch(
-            lambda df, bid: apply_cdc_batch(
-                df, bid, snapshot_path, keys, partition_col, version_col
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    (``streaming.sink.drain``). The snapshot is a versioned merge, not a
+    ``streaming.sink.write_batch`` store: re-applying a batch is already
+    a no-op."""
+    return drain(
+        updates,
+        lambda df, bid: apply_cdc_batch(
+            df, bid, snapshot_path, keys, partition_col, version_col
+        ),
+        checkpoint,
     )

@@ -19,9 +19,7 @@ def _write(spark, path, rows):
 
 def _cycle(spark, src, store, out, ckpt):
     stream = spark.readStream.schema(DOC_SCHEMA).parquet(src)
-    q = start_incremental_dedup(
-        stream, "doc_id", "text", store, out, ckpt, available_now=True
-    )
+    q = start_incremental_dedup(stream, "doc_id", "text", store, out, ckpt)
     q.awaitTermination()
 
 

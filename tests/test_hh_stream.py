@@ -50,9 +50,9 @@ def test_streamed_equals_batch_and_survives_retry(spark, sf_dir, tmp_path):
     assert streamed == batch
 
     # simulated at-least-once retry: a SECOND full drain (fresh
-    # checkpoint) appends every summary again; upper bounds inflate,
-    # candidates stay a superset, the exact pass still returns the
-    # batch answer.
+    # checkpoint, same batch ids) rewrites every batch's own
+    # ingest_batch partition, so the store is unchanged and the exact
+    # pass still returns the batch answer.
     _drain(spark, src, store, str(tmp_path / "ckpt2"))
     assert _answer(
         heavy_hitters_from_store(ev, spark, store, "user_id", PHI)

@@ -67,7 +67,9 @@ def test_streamed_store_matches_batch_and_survives_replay(spark, sf_dir, tmp_pat
 
     # a retried append (same sketch rows duplicated) changes NOTHING:
     # k-min of a multiset is k-min of its set
-    spark.read.parquet(store).write.mode("append").parquet(store)
+    spark.read.parquet(store).write.mode("append").partitionBy(
+        "ingest_batch"
+    ).parquet(store)
     assert _store_daily(spark, store) == want
 
     # compaction folds batches to one sketch per bucket, same answers

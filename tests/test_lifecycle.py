@@ -198,6 +198,32 @@ def test_iterate_checkpointed_contract(spark):
     release_local_checkpoint(out, blocking=True)
 
 
+def test_bpe_does_not_materialize_the_unread_last_round(spark, monkeypatch):
+    """``learn_bpe_merges``' merge list is complete after round n's
+    top-pair collect, so n merges materialize n-1 merged corpus
+    generations: the last round's corpus is never read."""
+    import prajna_spark.operators.lifecycle as lifecycle
+    from prajna_spark.pipeline.bpe import learn_bpe_merges
+
+    made: list[int] = []
+    real = lifecycle.scoped_local_checkpoint
+
+    def counting(df, *args, **kwargs):
+        made.append(1)
+        return real(df, *args, **kwargs)
+
+    # iterate_checkpointed resolves the name in its own module, so this
+    # counts the loop's generations only (not BPE's initial checkpoint)
+    monkeypatch.setattr(lifecycle, "scoped_local_checkpoint", counting)
+    words = spark.createDataFrame(
+        [("lower", 5), ("lowest", 2), ("newer", 6), ("wider", 3), ("banana", 4)],
+        "word string, freq long",
+    )
+    merges = learn_bpe_merges(words, "word", "freq", n_merges=8)
+    assert [r["round"] for r in merges.collect()] == list(range(1, 9))
+    assert len(made) == 7, made
+
+
 def test_persist_scopes_are_per_thread(spark):
     """Thread A persists inside its own scope while thread B opens and
     closes another: B's exit must not release A's frame (module-global

@@ -78,6 +78,24 @@ def test_compact_partitioned_root_preserves_layout(spark, tmp_path):
     assert got.count() == 30 and "day" in got.columns
 
 
+def _race_one_append(monkeypatch, path, append):
+    """Make the rewrite's first listing of ``path`` (taken before it reads
+    the store) run ``append`` right after: a sink landing mid-rewrite."""
+    import prajna_spark.operators.maintenance as m
+
+    real = m._parquet_files
+    state = {"n": 0}
+
+    def racy(p):
+        out = real(p)
+        if p == path and state["n"] == 0:
+            state["n"] = 1
+            append()
+        return out
+
+    monkeypatch.setattr(m, "_parquet_files", racy)
+
+
 def test_compact_aborts_on_concurrent_append(spark, tmp_path, monkeypatch):
     """A file appended between compact's read and its swap must abort the
     compaction (store untouched), not vanish with the old layout."""
@@ -87,22 +105,36 @@ def test_compact_aborts_on_concurrent_append(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "race")
     spark.createDataFrame([(1,)], "v long").write.parquet(path)
     extra = spark.createDataFrame([(2,)], "v long")
-
-    real = m._parquet_files
-    state = {"n": 0}
-
-    def racy(p):
-        out = real(p)
-        if p == path and state["n"] == 0:
-            state["n"] = 1
-            extra.coalesce(1).write.mode("append").parquet(path)
-        return out
-
-    monkeypatch.setattr(m, "_parquet_files", racy)
+    _race_one_append(
+        monkeypatch, path,
+        lambda: extra.coalesce(1).write.mode("append").parquet(path),
+    )
     with pytest.raises(RuntimeError, match="concurrent modification"):
         m.compact(spark, path)
     # nothing lost: both rows still present
     assert spark.read.parquet(path).count() == 2
+
+
+def test_sketch_compaction_aborts_on_concurrent_batch(spark, tmp_path, monkeypatch):
+    """The streamed sketch stores compact through the same guarded
+    rewrite: a micro-batch landing mid-compaction aborts it with every
+    batch's deltas still in the store."""
+    import pytest
+
+    from prajna_spark.streaming.rollup_stream import compact_store
+    from prajna_spark.streaming.sink import write_batch
+
+    path = str(tmp_path / "rollup_store")
+    schema = "epoch_start long, k string, n_events long, total_value double"
+    for batch_id in (0, 1):
+        delta = spark.createDataFrame([(0, "a", 1, 1.0)], schema)
+        write_batch(delta, batch_id, path)
+    late = spark.createDataFrame([(0, "a", 1, 1.0)], schema)
+    _race_one_append(monkeypatch, path, lambda: write_batch(late, 2, path))
+    with pytest.raises(RuntimeError, match="concurrent modification"):
+        compact_store(spark, path, ["k"])
+    got = spark.read.parquet(path)
+    assert sorted(r.ingest_batch for r in got.collect()) == [0, 1, 2]
 
 
 def test_compact_heals_interrupted_swap(spark, tmp_path):

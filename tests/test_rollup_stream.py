@@ -1,5 +1,6 @@
 """Streaming cascade twin: incremental finest-level maintenance
-(foreachBatch delta append) + cascade-on-read == batch cascade_rollup."""
+(foreachBatch per-batch delta write) + cascade-on-read == batch
+cascade_rollup."""
 
 from __future__ import annotations
 
@@ -25,9 +26,7 @@ def _write(spark, path, rows):
 
 def _run_cycle(spark, src, store, ckpt):
     stream = spark.readStream.schema(EVT_SCHEMA).parquet(src)
-    q = start_incremental_rollup(
-        stream, "ts", ["k"], "v", RES[0], store, ckpt, available_now=True
-    )
+    q = start_incremental_rollup(stream, "ts", ["k"], "v", RES[0], store, ckpt)
     q.awaitTermination()
 
 
@@ -65,7 +64,7 @@ def test_incremental_cascade_matches_batch(spark, tmp_path):
     # cycles (one delta each), proving cycle 2 did not reprocess cycle 1
     deltas = spark.read.parquet(store)
     assert deltas.where("epoch_start = 0").count() == 2
-    assert deltas.select("batch_id").distinct().count() >= 2
+    assert deltas.select("ingest_batch").distinct().count() >= 2
 
 
 def test_compaction_preserves_results_and_shrinks_store(spark, tmp_path):
@@ -87,7 +86,7 @@ def test_compaction_preserves_results_and_shrinks_store(spark, tmp_path):
     after = spark.read.parquet(store)
     assert after.count() == n
     assert after.where("epoch_start = 0").count() == 1  # folded
-    assert set(r.batch_id for r in after.collect()) == {-1}
+    assert set(r.ingest_batch for r in after.collect()) == {-1}
     with persist_scope():
         assert _snap(cascade_from_store(spark, store, ["k"], RES)) == expect
 

@@ -94,6 +94,57 @@ def test_sessionize_gap_boundary_exactly_at_gap_opens_new(spark, tmp_path):
     assert opens[(2, 2000)] == 2      # sub-gap event extended
 
 
+def test_batch_twin_splits_at_the_same_gap_boundary(spark, tmp_path):
+    """Gaps of 1799, 1800 and 1801 s at the 30-minute timeout: the batch
+    operator behind session_window_users and the streaming sessionizer
+    must cut the same sessions — a gap of AT LEAST the timeout opens a
+    new session (F.session_window merges the 1800 s pair)."""
+    from prajna_spark.streaming.sessions import gap_sessions
+
+    gap = 30 * 60
+    events = [
+        (t, user, 1.0)
+        for user, second in ((1, 2799), (2, 2800), (3, 2801))
+        for t in (1000, second)
+    ]
+    batch = gap_sessions(
+        spark.createDataFrame(
+            [(u, t, v) for t, u, v in events], "user_id long, t long, value double"
+        ),
+        gap,
+    )
+    batch_rows = sorted(
+        (r.user_id, r.session_start, r.session_end - gap, r.n_events)
+        for r in batch.collect()
+    )
+
+    src = str(tmp_path / "e_twin")
+    _write_events(spark, src, events)
+    q = (
+        sessionize(spark.readStream.schema(EVT_SCHEMA).parquet(src), gap_sec=gap)
+        .writeStream.format("memory")
+        .queryName("t_gap_twin")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt_twin"))
+        .start()
+    )
+    q.awaitTermination()
+    stream_rows = sorted(
+        {
+            (r.user_id, r.session_start, r.session_end, r.n_events)
+            for r in spark.table("t_gap_twin").collect()
+        }
+    )
+    assert batch_rows == stream_rows == [
+        (1, 1000, 2799, 2),
+        (2, 1000, 1000, 1),
+        (2, 2800, 2800, 1),
+        (3, 1000, 1000, 1),
+        (3, 2801, 2801, 1),
+    ]
+
+
 def _drain_with_scope(spark, tmp_path, name, threshold):
     """Drain the sessionizer under session_state_scope and return
     (rows, provider label, rocksdb* custom-metric keys seen)."""

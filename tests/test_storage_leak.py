@@ -13,6 +13,8 @@ test scale, without needing the 100x fixture.
 
 from __future__ import annotations
 
+import os
+
 from prajna_spark.operators.lifecycle import persist_scope
 from prajna_spark.plans.jvmstate import drain_to_baseline, jvm_state_snapshot
 
@@ -66,3 +68,21 @@ def test_catalog_sequence_returns_jvm_state_to_baseline(spark, sf_dir):
         f"broadcast blocks leaked: baseline={baseline} grown={grown} "
         f"final={final}"
     )
+
+
+def test_streaming_query_rebuild_leaves_one_scratch_dir(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A catalog query that drains a stream into an on-disk store keeps
+    ONE scratch directory per query, scale and thread: a rebuild wipes
+    and reuses it instead of leaving a store and checkpoint behind per
+    build."""
+    import tempfile
+
+    from prajna_spark.queries import queries
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    build = queries()["anomaly_stream_alerts"]
+    counts = [build(spark, sf_dir).count() for _ in range(2)]
+    assert counts[0] == counts[1] > 0
+    assert len(os.listdir(tmp_path)) == 1, os.listdir(tmp_path)

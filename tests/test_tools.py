@@ -1,4 +1,5 @@
-"""Unit tests for the bench/scale tooling rules — no Spark session.
+"""Unit tests for the bench/scale tooling rules — no Spark session in
+this process (the plan-capture test starts its own JVMs).
 
 These pin the r10-advisory/VERDICT fixes at the rule level: the bless
 gate's dual-average requirement and scale_smoke's argv contract. The
@@ -85,3 +86,26 @@ class TestScaleSmokeArgs:
     def test_unknown_flag_rejected(self):
         with pytest.raises(SystemExit):
             parse_args(["--bogus"])
+
+
+def test_capture_plans_normalize_is_stable_across_jvms(sf_dir, tmp_path):
+    """Two ``capture_plans --normalize`` runs in two JVMs, building the
+    queries in opposite orders (so expression ids, and with them the
+    RewriteDistinctAggregates group order, differ), write byte-identical
+    plans."""
+    import subprocess
+
+    names = ["profile_orders_columns", "q21_waiting_suppliers"]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_DRIVER_MEM="1g")
+    for run, order in (("a", names), ("b", names[::-1])):
+        subprocess.run(
+            [sys.executable, os.path.join(root, "tools", "capture_plans.py"),
+             "--normalize", str(tmp_path / run), "plan", *order],
+            env=env, check=True, capture_output=True, timeout=600,
+        )
+    for name in names:
+        a = (tmp_path / "a" / f"{name}_plan.txt").read_text()
+        b = (tmp_path / "b" / f"{name}_plan.txt").read_text()
+        assert "FAILED" not in a and "Expand" in a, a[:300]
+        assert a == b, name
