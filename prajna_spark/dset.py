@@ -33,6 +33,8 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prajna_spark.sources.catalog import read_parquet
+
 ColumnLike = Column | str
 
 
@@ -95,8 +97,9 @@ class DSet:
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "DSet":
         """Prajna ``DSet.loadSource()`` (DSetGenerics.fs:367-384): re-open a
-        named stored DSet -> parquet scan with pushdown/pruning."""
-        return cls(spark.read.parquet(path))
+        named stored DSet -> parquet scan with pushdown/pruning; the schema
+        is inferred once per file version (``sources.catalog.read_parquet``)."""
+        return cls(read_parquet(spark, path))
 
     # ------------------------------------------------------------------
     # Sinks (SURVEY §2.2)

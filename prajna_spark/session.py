@@ -11,6 +11,12 @@ below are chosen to also be the right defaults on a large cluster:
   hot queries are 100% JVM built-ins).
 - Session timezone pinned to UTC so date/time semantics match the DuckDB
   oracle regardless of host timezone.
+- PySpark's per-call call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled``): left on, every Column
+  and DataFrame call makes about four extra py4j round trips and a Python
+  stack walk. An error keeps its error class and message and loses only
+  the Python ``file:line`` in its "DataFrame query context" section.
+  Sessions passed to ``tune()`` keep their own setting.
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ def get_spark(app_name: str = "prajna-spark") -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # Every cache/checkpoint this engine takes is MEMORY_AND_DISK —

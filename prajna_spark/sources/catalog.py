@@ -7,6 +7,20 @@ parquet table; ``spark.read.parquet`` gives us columnar scan with predicate
 pushdown + column pruning for free — on 100 TB the scan reads only the
 row-groups and columns the query touches (verify with
 ``plans.assert_pushdown``).
+
+Re-opening is metadata-only after the first time. ``spark.read.parquet``
+without a schema infers one from the footers in a Spark job (~60 ms per
+load); :func:`read_parquet` pays that once per file version and then
+reads with ``.schema(cached)``, which launches no job and plans the same
+scan (a given schema and an inferred one both go through ``asNullable``).
+The memo key is the resolved path, ``(st_ino, st_size, st_mtime_ns,
+st_ctime_ns)`` of every file under it (a rewrite with a new schema is
+seen even inside one mtime tick) and the reader confs that change what
+inference returns (``SCHEMA_CONFS``). Only paths the local filesystem
+can ``stat`` are memoised: for a remote path (a URI, or any path when
+the default filesystem is not local) ``os.stat`` cannot prove the file
+unchanged, and a missing path must still raise Spark's own error, so
+both read exactly as ``spark.read.parquet`` does.
 """
 
 from __future__ import annotations
@@ -15,6 +29,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -35,12 +50,66 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# (resolved path, conf values) -> (file versions, inferred StructType).
+# One entry per path and conf setting: a new file version replaces the
+# old entry. Python objects only, no JVM references; two threads that
+# miss together both infer, and either result is the right one. Versions
+# are read before inference, so a rewrite racing it costs one more
+# inference, never a stale schema.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _file_versions(path: str) -> tuple | None:
+    """``(relative name, ino, size, mtime_ns, ctime_ns)`` of every file
+    under ``path`` (the file itself if it is one); None if the path cannot
+    be stat'ed (a URI, a glob or a missing path)."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (("", st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns),)
+        out = []
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                out.append((os.path.relpath(full, path), st.st_ino, st.st_size,
+                            st.st_mtime_ns, st.st_ctime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version (see the module docstring for the memo key)."""
+    versions = _file_versions(path)
+    if versions is None or not spark.sparkContext._jsc.hadoopConfiguration().get(
+        "fs.defaultFS", "file:///"
+    ).startswith("file:"):
+        return spark.read.parquet(path)
+    key = (os.path.realpath(path), tuple(spark.conf.get(c) for c in SCHEMA_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == versions:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (versions, df.schema)
+    return df
+
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

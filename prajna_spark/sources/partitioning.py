@@ -23,6 +23,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from prajna_spark.session import tune
+from prajna_spark.sources.catalog import read_parquet
 
 
 def write_partitioned(
@@ -43,4 +44,4 @@ def write_partitioned(
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     tune(spark)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prajna_spark.session import tune
+from prajna_spark.sources.catalog import read_parquet, stream_table
 
 EVENTS_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 EVENTS_SCHEMA_NANOS = "event_id long, ts long, user_id long, event_type string, value double, props string"
@@ -38,13 +39,12 @@ def events_readstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     - TIMESTAMP(NANOS) (r1-r2 shape, reads as bigint under nanosAsLong):
       read ``ts`` as long and convert losslessly via integer division.
 
-    Shape detection is a batch footer peek (schema-only, no data scan) —
-    cheap, and the only way to branch since streaming needs the schema
-    declared up front."""
+    Shape detection reads the batch schema through the catalog's schema
+    memo (one footer-inference job per file version, none after) — the
+    only way to branch, since streaming needs the schema declared up
+    front."""
     tune(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_type = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes).get("ts")
-    from prajna_spark.sources import stream_table
+    ts_type = dict(read_parquet(spark, f"{sf_dir}/events.parquet").dtypes).get("ts")
 
     schema = EVENTS_SCHEMA_NANOS if ts_type == "bigint" else EVENTS_SCHEMA
     stream = stream_table(spark, "events", sf_dir, schema)

@@ -8,9 +8,12 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 from check_parity import compare  # noqa: E402
 

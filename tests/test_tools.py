@@ -109,3 +109,27 @@ def test_capture_plans_normalize_is_stable_across_jvms(sf_dir, tmp_path):
         b = (tmp_path / "b" / f"{name}_plan.txt").read_text()
         assert "FAILED" not in a and "Expand" in a, a[:300]
         assert a == b, name
+
+
+def test_tools_resolve_their_own_tree():
+    """No tool names a fixed checkout: an absolute ``sys.path`` entry or an
+    absolute path to a file of the tree makes a tool run from a second
+    checkout (a parent-vs-change gate) silently use the other tree."""
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    entries = "|".join(
+        re.escape(n) for n in sorted(os.listdir(root)) if not n.startswith(".")
+    )
+    absolute_syspath = re.compile(r"sys\.path\.(?:insert|append)\([^)]*[\"'][/~]")
+    into_tree = re.compile(rf"[\"'](?:/[^\"'\s/]+)+/(?:{entries})(?:/[^\"']*)?[\"']")
+    tools = os.path.join(root, "tools")
+    bad = []
+    for name in sorted(os.listdir(tools)):
+        if not name.endswith(".py"):
+            continue
+        with open(os.path.join(tools, name)) as f:
+            for i, line in enumerate(f, 1):
+                if root in line or absolute_syspath.search(line) or into_tree.search(line):
+                    bad.append(f"{name}:{i}: {line.strip()}")
+    assert not bad, bad

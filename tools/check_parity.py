@@ -10,6 +10,7 @@ Usage: python tools/check_parity.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -17,7 +18,9 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the tree THIS file sits in, so a second checkout checks its own library
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from prajna_spark.operators.lifecycle import persist_scope  # noqa: E402
 from prajna_spark.queries import registry  # noqa: E402

@@ -22,12 +22,15 @@ Usage: python tools/determinism_check.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the tree THIS file sits in, so a second checkout checks its own library
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from prajna_spark.operators.lifecycle import persist_scope  # noqa: E402
 from prajna_spark.queries import registry  # noqa: E402

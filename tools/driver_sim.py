@@ -37,7 +37,9 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the tree THIS file sits in, so a second checkout checks its own library
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.01"
 SAMPLE = [
@@ -119,7 +121,7 @@ def run_bench_tail() -> None:
         SPARK_GRAFT_BENCH_REPS="1",
     )
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, os.path.join(ROOT, "bench.py")],
         env=env,
         capture_output=True,
         text=True,

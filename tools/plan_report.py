@@ -11,10 +11,13 @@ Usage: python tools/plan_report.py [sf_dir] [out_md]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the tree THIS file sits in, so a second checkout checks its own library
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from prajna_spark.operators.lifecycle import persist_scope  # noqa: E402
 from prajna_spark.queries import registry  # noqa: E402
@@ -51,7 +54,7 @@ def audit(plan: str) -> dict[str, int | str]:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/PLANS.md"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "PLANS.md")
     spark = get_spark("prajna-plan-report")
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -19,9 +19,9 @@ import sys
 import time
 
 # the tree THIS file sits in, not a hardcoded path — so `cd <old-tree> &&
-# python tools/profile_query.py` profiles that tree (r12: the hardcoded
-# /root/repo briefly made an old-vs-new profile comparison profile the
-# new tree twice)
+# python tools/profile_query.py` profiles that tree (a hardcoded checkout
+# path once made an old-vs-new profile comparison profile the new tree
+# twice)
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from prajna_spark.operators.lifecycle import persist_scope  # noqa: E402
